@@ -143,7 +143,8 @@ def _cmd_validate(args: argparse.Namespace) -> int:
     if res.file_level_failure:
         print(f"FILE REJECTED: {res.schema_issues}")
         return 1
-    print(f"error records: {res.error_count}")
+    print(f"error records: {res.error_count} "
+          f"(rows in: {res.details['rows_in']})")
     if res.error_file:
         print(f"error file: {res.error_file}")
     if res.archived_to:

@@ -12,31 +12,43 @@ Re-expresses ``compare_csv_and_db_error_desc``
 - count match (A4): total CSV data rows == DB error count  -> FATAL
 
 The asymmetry (CSV ⊆ DB, DB-only payees tolerated) is deliberate and
-matches PIPE:953-966.
+matches PIPE:953-966. A payee whose tokens are all blank has no token
+set, so it is in none of the four frames, but its rows still count.
+
+``reconcile_errors`` runs no Spark action. The counts and the verdict
+come from one aggregate over the full-outer join, run the first time
+any of them is read; the four frames stay lazy for callers that look
+at rows.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+
+from etl_validator_github_spark.plans.session import job_description
 
 
 def error_tokens(df: DataFrame, payee_col: str, desc_col: str) -> DataFrame:
-    """payee -> array of normalized distinct error tokens."""
-    return (
-        df.select(
-            F.col(payee_col).alias("payee_id"),
-            F.explode(F.split(F.col(desc_col), ",")).alias("token"),
-        )
-        .select(
-            "payee_id",
-            F.trim(F.regexp_replace("token", r"\s+", " ")).alias("token"),
-        )
-        .filter(F.length("token") > 0)
-        .groupBy("payee_id")
-        .agg(F.sort_array(F.collect_set("token")).alias("tokens"))
+    """payee -> (rows, tokens): the payee's input row count and its sorted
+    distinct normalized error tokens, null when every token is blank.
+
+    Tokens are built per row before the groupBy, so rows whose tokens
+    are all blank (or whose ERROR_DESC is null) still count."""
+    row_tokens = F.filter(
+        F.transform(
+            F.split(F.col(desc_col), ","),
+            lambda t: F.trim(F.regexp_replace(t, r"\s+", " ")),
+        ),
+        lambda t: F.length(t) > 0,
+    )
+    tokens = F.array_distinct(F.flatten(F.collect_list(row_tokens)))
+    return df.groupBy(F.col(payee_col).alias("payee_id")).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.when(F.size(tokens) > 0, F.sort_array(tokens)).alias("tokens"),
     )
 
 
@@ -46,8 +58,21 @@ class ReconcileResult:
     mismatched: DataFrame
     missing_in_db: DataFrame
     missing_in_csv: DataFrame
-    csv_count: int
-    db_count: int
+    #: One row: csv_count, db_count, mismatched, missing_in_db.
+    totals: DataFrame
+
+    @cached_property
+    def _counts(self) -> Row:
+        with job_description(self.totals.sparkSession, "reconcile"):
+            return self.totals.collect()[0]
+
+    @property
+    def csv_count(self) -> int:
+        return self._counts["csv_count"]
+
+    @property
+    def db_count(self) -> int:
+        return self._counts["db_count"]
 
     @property
     def counts_match(self) -> bool:
@@ -58,8 +83,8 @@ class ReconcileResult:
         # missing_in_csv is reported but non-fatal (PIPE:966).
         return (
             self.counts_match
-            and self.mismatched.isEmpty()
-            and self.missing_in_db.isEmpty()
+            and self._counts["mismatched"] == 0
+            and self._counts["missing_in_db"] == 0
         )
 
 
@@ -84,26 +109,30 @@ def reconcile_errors(
         "payee_id",
         F.col("c.tokens").alias("csv_tokens"),
         F.col("d.tokens").alias("db_tokens"),
+        F.col("c.rows").alias("csv_rows"),
+        F.col("d.rows").alias("db_rows"),
     )
-    missing_in_db = joined.filter(
-        F.col("db_tokens").isNull() & F.col("csv_tokens").isNotNull()
-    ).select("payee_id", "csv_tokens")
-    missing_in_csv = joined.filter(
-        F.col("csv_tokens").isNull() & F.col("db_tokens").isNotNull()
-    ).select("payee_id", "db_tokens")
-    both = joined.filter(
-        F.col("csv_tokens").isNotNull() & F.col("db_tokens").isNotNull()
-    )
+    in_csv = F.col("csv_tokens").isNotNull()
+    in_db = F.col("db_tokens").isNotNull()
     # CSV ⊆ DB passes (PIPE:953-956): only CSV-side extras are a mismatch.
     extras = F.array_except("csv_tokens", "db_tokens")
-    mismatched = both.filter(F.size(extras) > 0).withColumn("csv_only_tokens", extras)
-    matched = both.filter(F.size(extras) == 0)
+    is_missing_in_db = in_csv & ~in_db
+    is_mismatched = in_csv & in_db & (F.size(extras) > 0)
 
     return ReconcileResult(
-        matched=matched,
-        mismatched=mismatched,
-        missing_in_db=missing_in_db,
-        missing_in_csv=missing_in_csv,
-        csv_count=csv_errors.count(),
-        db_count=db_errors.count(),
+        matched=joined.filter(in_csv & in_db & (F.size(extras) == 0))
+        .select("payee_id", "csv_tokens", "db_tokens"),
+        mismatched=joined.filter(is_mismatched)
+        .select("payee_id", "csv_tokens", "db_tokens",
+                extras.alias("csv_only_tokens")),
+        missing_in_db=joined.filter(is_missing_in_db)
+        .select("payee_id", "csv_tokens"),
+        missing_in_csv=joined.filter(in_db & ~in_csv)
+        .select("payee_id", "db_tokens"),
+        totals=joined.agg(
+            F.coalesce(F.sum("csv_rows"), F.lit(0)).alias("csv_count"),
+            F.coalesce(F.sum("db_rows"), F.lit(0)).alias("db_count"),
+            F.count_if(is_mismatched).alias("mismatched"),
+            F.count_if(is_missing_in_db).alias("missing_in_db"),
+        ),
     )

@@ -12,19 +12,24 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_validator_github_spark.operators.errors import to_error_records, write_error_csv
 from etl_validator_github_spark.operators.rules import Rule
 from etl_validator_github_spark.operators.validate import (
-    ERRORS_COL,
     failing_records,
     validate_schema,
 )
-from etl_validator_github_spark.sources.io import read_bankdata, write_single_csv
+from etl_validator_github_spark.plans.session import job_description
+from etl_validator_github_spark.sources.io import (
+    read_bankdata,
+    staging_dir,
+    write_single_csv,
+)
 
 
 def default_end_date_for_deactivated(
@@ -134,22 +139,26 @@ def validate_file(
             details={"reason": f"missing columns: {issues['missing']}"},
         )
 
-    failing = failing_records(df, rules)
-    # Persist across the two actions (count + CSV write): without it the
-    # full scan + rule projection would execute twice — at the 100 TB
-    # design point that doubles the hot path's I/O and CPU.
-    errors = to_error_records(failing, filename=basename).persist()
-    try:
-        error_count = errors.count()
+    # One Spark action: the error records go to a staging path, the same
+    # pass observes the input and error row counts, and the observed
+    # error count decides whether the file is committed (the reference
+    # writes no error file for a clean input).
+    rows_in, rows_out = Observation(), Observation()
+    n = F.count(F.lit(1)).alias("n")
+    errors = to_error_records(
+        failing_records(df.observe(rows_in, n), rules), filename=basename
+    ).observe(rows_out, n)
 
-        error_file = None
-        if error_count > 0:
-            os.makedirs(error_dir, exist_ok=True)
-            error_file = write_single_csv(
-                errors, error_dir, f"mtfdm_{env}_dmbankerrorfile_{ts}.csv"
-            ) if single_file else _write_dir(errors, error_dir, ts, env)
-    finally:
-        errors.unpersist()
+    def has_errors() -> bool:
+        return rows_out.get["n"] > 0
+
+    with job_description(spark, f"validate: {basename}"):
+        error_file = write_single_csv(
+            errors, error_dir, f"mtfdm_{env}_dmbankerrorfile_{ts}.csv",
+            keep=has_errors,
+        ) if single_file else _write_dir(errors, error_dir, ts, env, has_errors)
+    error_count = rows_out.get["n"]
+    counts = {"rows_in": rows_in.get["n"]}
 
     # Error-folder invariant (reference PIPE:1079-1093, run-level rule at
     # PIPE:2170): a parquet artifact in the error folder fails the run —
@@ -169,6 +178,7 @@ def validate_file(
                 "reason": "unexpected parquet in error folder "
                           "(expected CSV only)",
                 "unexpected_parquet_files": unexpected_parquet,
+                **counts,
             },
         )
 
@@ -191,14 +201,23 @@ def validate_file(
 
     return PipelineResult(
         input_path, issues, error_count, error_file, archived_to,
-        details={"extra_columns": issues["extra"]},
+        details={"extra_columns": issues["extra"], **counts},
     )
 
 
-def _write_dir(errors: DataFrame, error_dir: str, ts: str, env: str) -> str:
-    path = os.path.join(error_dir, f"mtfdm_{env}_dmbankerrorfile_{ts}")
-    write_error_csv(errors, path, single_file=False)
-    return path
+def _write_dir(
+    errors: DataFrame, error_dir: str, ts: str, env: str,
+    keep: Callable[[], bool],
+) -> str | None:
+    name = f"mtfdm_{env}_dmbankerrorfile_{ts}"
+    with staging_dir(error_dir, name) as tmp:
+        write_error_csv(errors, tmp, single_file=False)
+        if not keep():
+            return None
+        path = os.path.join(error_dir, name)
+        shutil.rmtree(path, ignore_errors=True)
+        os.rename(tmp, path)
+        return path
 
 
 @dataclass

@@ -9,8 +9,13 @@ sized to the data, and Arrow for any pandas interchange.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+#: Local property Spark reads for job and SQL-execution descriptions.
+_JOB_DESCRIPTION = "spark.job.description"
 
 
 def get_spark(
@@ -35,6 +40,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str) -> Iterator[None]:
+    """Label the Spark jobs and SQL executions started inside the block
+    with ``text`` (the status store and UI show it per execution), then
+    restore the description the calling thread had before."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, previous)
 
 
 def explain_str(df) -> str:

@@ -12,6 +12,8 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,22 +153,46 @@ def parquet_metadata_row_count(path: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
-def write_single_csv(df: DataFrame, directory: str, filename: str, sep: str = "|") -> str:
+def write_single_csv(
+    df: DataFrame,
+    directory: str,
+    filename: str,
+    sep: str = "|",
+    keep: Callable[[], bool] | None = None,
+) -> str | None:
     """S12 single-file sink: coalesce(1) + rename of the part file.
 
     Mirrors the reference's one-error-CSV-per-run naming
     (mtfdm_{env}_dmbankerrorfile_{ts}.csv, PIPE:2741-2748). Only for
     per-batch outputs that are small by construction.
+
+    The write goes to a ``__tmp_<filename>`` staging directory, so the
+    sink is one Spark action. ``keep`` is asked after the write (a
+    caller passes a check on an ``Observation`` the write filled); when
+    it says no, nothing is moved into place and None is returned. The
+    staging directory is removed on every exit, a failed write included.
     """
-    tmp = os.path.join(directory, f"__tmp_{filename}")
-    df.coalesce(1).write.mode("overwrite").option("header", True).option(
-        "sep", sep
-    ).csv(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-    final = os.path.join(directory, filename)
-    shutil.move(part, final)
-    shutil.rmtree(tmp)
-    return final
+    with staging_dir(directory, filename) as tmp:
+        df.coalesce(1).write.mode("overwrite").option("header", True).option(
+            "sep", sep
+        ).csv(tmp)
+        if keep is not None and not keep():
+            return None
+        part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
+        final = os.path.join(directory, filename)
+        shutil.move(part, final)
+        return final
+
+
+@contextmanager
+def staging_dir(directory: str, name: str) -> Iterator[str]:
+    """Yield ``directory/__tmp_<name>`` for a sink to write into, and
+    remove it on exit whether the block committed, discarded or raised."""
+    tmp = os.path.join(directory, f"__tmp_{name}")
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def archive_path(base: str, year: int, month: int) -> str:

@@ -8,6 +8,9 @@ the precise error list for each.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_validator_github_spark.operators.validate import ERRORS_COL, with_errors
@@ -87,3 +90,29 @@ def errors_for(spark: SparkSession, rows: list[dict]) -> list[list[str]]:
     df = make_df(spark, tagged)
     out = with_errors(df).select("PayeeID", ERRORS_COL).collect()
     return [row[ERRORS_COL] for row in out]
+
+
+@contextmanager
+def sql_executions(spark: SparkSession) -> Iterator[list[str]]:
+    """Yield a list that, when the block exits, holds the description of
+    every SQL execution the block started, oldest first.
+
+    Read from the driver's SQL status store after draining the listener
+    bus. Only executions newer than the block's start are kept, so the
+    store's retention cap cannot hide or double-count one."""
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+    bus = spark.sparkContext._jsc.sc().listenerBus()  # noqa: SLF001
+
+    def newest(k: int = 64) -> list[tuple[int, str]]:
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        execs = store.executionsList(max(n - k, 0), k)
+        return [
+            (execs.apply(i).executionId(), execs.apply(i).description())
+            for i in range(execs.size())
+        ]
+
+    start = max((i for i, _ in newest()), default=-1)
+    started: list[str] = []
+    yield started
+    started.extend(d for i, d in newest() if i > start)
