@@ -1,6 +1,6 @@
 """Per-run CPU attribution over the in-process AppStatusStore.
 
-The r12 spans-burst root-cause (tools/spans_bisect.py, SCALE.md) showed
+The r12 spans-burst root-cause (MEASURE_1M_r12.jsonl, SCALE.md) showed
 byte-identical work swinging 4.4x in executorCpuTime under host-level
 CPU throttling — wall time alone cannot distinguish "box slow" from
 "operator regressed". This meter folds that capture into every timed

@@ -1451,73 +1451,6 @@ def _span_windows(base: DataFrame, k: int,
     )
 
 
-def windowed_hashes_np(base: DataFrame, k: int,
-                       binary: bool = False) -> DataFrame:
-    """Arrow-batched twin of ``_span_windows`` (the np_assign/np_probe
-    convention from scale/similarity.py): identical (doc_id, pos, h)
-    values, Python-side kernel, opt-in only — the expression plan
-    stays the oracle default.
-
-    The kernel avoids per-window string assembly entirely: every
-    k-token window is an overlapping BYTE SLICE of the doc's full
-    joined text, so one encode + a cumulative token-offset table turn
-    window hashing into ``md5(text[offs[p] : offs[p+k] − 1])`` — one
-    C-speed md5 call per window, no per-window join. Useful as the
-    measured comparison point for the codegen path (SCALE.md records
-    both at 1M; see tools/measure_1m.py op ``spans_np``).
-
-    ``binary`` mirrors ``_span_windows``: 16-byte digests instead of
-    hex strings, value-equal under unhex.
-    """
-    import hashlib
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("pos", IntegerType()),
-        StructField("h", BinaryType() if binary else StringType()),
-    ])
-
-    def gen(batches):
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids: list = []
-            poss: list = []
-            hs: list = []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["__toks"]):
-                toks = list(toks)
-                n = len(toks)
-                if n < k:
-                    continue
-                text = " ".join(toks).encode("utf-8")
-                offs = [0]
-                off = 0
-                for t in toks:
-                    off += len(t.encode("utf-8")) + 1
-                    offs.append(off)
-                for p in range(n - k + 1):
-                    ids.append(doc_id)
-                    poss.append(p + 1)
-                    d = md5(text[offs[p]:offs[p + k] - 1])
-                    hs.append(d.digest() if binary else d.hexdigest())
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "pos": pd.Series(poss, dtype="int32"),
-                "h": pd.Series(hs, dtype="object"),
-            })
-
-    return base.select("doc_id", "__toks").mapInPandas(gen, schema)
-
-
 def _span_union_stats(flagged: DataFrame, k: int,
                       count_alias: str) -> DataFrame:
     """Per-doc (count, covered_tokens) over flagged (doc_id, pos)
@@ -1542,21 +1475,15 @@ def _span_union_stats(flagged: DataFrame, k: int,
 
 
 def substring_span_stats(docs: DataFrame,
-                         span_tokens: int = SPAN_TOKENS,
-                         np_windows: bool = False) -> DataFrame:
+                         span_tokens: int = SPAN_TOKENS) -> DataFrame:
     """Per-doc duplicated-span report: window counts, duplicated-window
     counts, exact token positions covered by duplicated spans, and a
-    keep flag (coverage ≤ SPAN_MAX_COVERAGE_MILLI ‰).
-
-    ``np_windows=True`` swaps the window-hash kernel for the
-    equality-pinned Arrow byte-slice twin (``windowed_hashes_np``);
-    the expression plan stays the default and the oracle's shape."""
+    keep flag (coverage ≤ SPAN_MAX_COVERAGE_MILLI ‰)."""
     k = int(span_tokens)
     base = _span_base(docs)
     # Binary (unhex) window keys: identical grouping semantics, ~35%
     # less shuffle — the final report never exposes h.
-    wins = (windowed_hashes_np(base, k, binary=True) if np_windows
-            else _span_windows(base, k, binary=True))
+    wins = _span_windows(base, k, binary=True)
     gc = wins.groupBy("h").agg(F.count(F.lit(1)).alias("global_count"))
     dup = (
         wins.join(gc.filter(F.col("global_count") > 1), "h")

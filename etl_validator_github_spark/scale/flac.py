@@ -477,45 +477,6 @@ def decode_flac(payload: bytes) -> "tuple[int, int, list[int]]":
 # encode
 
 
-def _rice_cost(residuals: "list[int]", param: int) -> int:
-    return sum((_zigzag(r) >> param) + 1 + param for r in residuals)
-
-
-def _best_rice_u(us: "list[int]") -> "tuple[int, int]":
-    """(param, coded bits) minimizing the exact Rice cost over
-    pre-zigzagged residuals; params 0-30 (5-bit method reaches 30; 31
-    is the escape).
-
-    Takes zigzags, not residuals: the exhaustive parameter × partition
-    search was the encoder's hot loop (r13 profile: ~62k `_zigzag`
-    calls per 2-frame stereo doc re-deriving the same values), and the
-    zigzag of a residual is parameter-independent, so callers compute
-    it ONCE per residual array. Same exact costs, same argmin, same
-    early break — byte-identical output (pinned by the encode-bytes
-    regression test)."""
-    n = len(us)
-    best_p, best_c = 0, sum(us) + n
-    for p in range(1, 31):
-        c = sum(u >> p for u in us) + (1 + p) * n
-        if c < best_c:
-            best_p, best_c = p, c
-        elif c > best_c + 8 * n:
-            break
-    return best_p, best_c
-
-
-def _best_rice(residuals: "list[int]") -> "tuple[int, int]":
-    """(param, coded bits) minimizing the exact Rice cost; params 0-30
-    (5-bit method reaches 30; 31 is the escape)."""
-    return _best_rice_u([_zigzag(r) for r in residuals])
-
-
-def _fixed_residuals(x: "list[int]", order: int) -> "list[int]":
-    coef = _FIXED_COEF[order]
-    return [x[i] - sum(c * x[i - 1 - j] for j, c in enumerate(coef))
-            for i in range(order, len(x))]
-
-
 #: Encoder cap on the Rice partition order (2^6 = 64 partitions is
 #: libFLAC's default ceiling too); the decoder accepts any order.
 _MAX_PORDER = 6
@@ -524,88 +485,6 @@ _MAX_PORDER = 6
 #: rebuilt tens of thousands of times per encode batch otherwise).
 _P_COL = np.arange(31, dtype=np.int64)[:, None]
 _INT64_MAX = np.iinfo(np.int64).max
-
-
-def _plan_residual(res: "list[int]", blocksize: int,
-                   order: int) -> "tuple[int, int, list[int], int]":
-    """Choose (porder, method, per-partition params, total coded bits)
-    minimizing the exact residual size. Partitioning isolates rare
-    large residuals (e.g. a sawtooth wrap) so one spike doesn't drag
-    every sample's Rice parameter up."""
-    us = [_zigzag(r) for r in res]  # parameter-independent, hoisted (r13)
-    # Valid porders form a contiguous prefix [0..pmax] (2^p | blocksize
-    # fails monotonically, and blocksize>>p > order decreases), exactly
-    # the porders the previous ascending-break loop visited.
-    pmax = 0
-    while (pmax < _MAX_PORDER
-           and blocksize % (1 << (pmax + 1)) == 0
-           and (blocksize >> (pmax + 1)) > order):
-        pmax += 1
-    # Rice costs are ADDITIVE across partitions: Σ(u>>p) tables built
-    # once per finest partition and pairwise-summed for coarser levels
-    # replace the old per-porder re-summation (the encoder's remaining
-    # hot loop after the zigzag hoist — 31·n work per LEVEL becomes
-    # 31·n once + cheap merges). Costs, argmin scan, early break and
-    # ascending-porder tie-break are bit-for-bit the old ones, so the
-    # chosen parameters — and the encoded bytes — are identical
-    # (pinned by the encode-bytes regression test).
-    size = blocksize >> pmax
-    levels = [[]]
-    pos = 0
-    for k in range(1 << pmax):
-        cnt = size - (order if k == 0 else 0)
-        seg = us[pos:pos + cnt]
-        # Σ(u>>p) = Σ_{j≥p} B_j·2^(j−p) where B_j counts set bit j
-        # across the segment — one set-bit pass per value plus the
-        # suffix recurrence T[p] = 2·T[p+1] + B[p], instead of 31
-        # full summations. Exact integer identity, same table.
-        bits_hist = [0] * 64
-        for u in seg:
-            while u:
-                low = u & -u
-                bits_hist[low.bit_length() - 1] += 1
-                u ^= low
-        table = [0] * 32
-        acc = 0
-        for j in range(63, 30, -1):
-            acc = (acc << 1) + bits_hist[j]
-        table[31] = acc
-        for p in range(30, -1, -1):
-            table[p] = (table[p + 1] << 1) + bits_hist[p]
-        levels[0].append((table[:31], cnt))
-        pos += cnt
-    for _ in range(pmax):
-        prev = levels[-1]
-        levels.append([
-            ([a + b for a, b in zip(prev[2 * j][0], prev[2 * j + 1][0])],
-             prev[2 * j][1] + prev[2 * j + 1][1])
-            for j in range(len(prev) // 2)
-        ])
-
-    def _best_from_table(s: "list[int]", cnt: int) -> "tuple[int, int]":
-        # _best_rice_u's exact scan, on a precomputed Σ(u>>p) table.
-        best_p, best_c = 0, s[0] + cnt
-        for p in range(1, 31):
-            c = s[p] + (1 + p) * cnt
-            if c < best_c:
-                best_p, best_c = p, c
-            elif c > best_c + 8 * cnt:
-                break
-        return best_p, best_c
-
-    best = None
-    for porder in range(pmax + 1):
-        params, bits = [], 0
-        for s, cnt in levels[pmax - porder]:
-            param, rbits = _best_from_table(s, cnt)
-            params.append(param)
-            bits += rbits
-        nparts = 1 << porder
-        method = 1 if max(params) > 14 else 0
-        total = 2 + 4 + nparts * (5 if method else 4) + bits
-        if best is None or total < best[3]:
-            best = (porder, method, params, total)
-    return best
 
 
 #: Cached per-pmax index arrays for the fused planner: partition
@@ -634,8 +513,8 @@ def _level_idx(pmax: int) -> "tuple[np.ndarray, np.ndarray, list[int]]":
 def _plan_subframe_np(x: "np.ndarray", n: int, bps: int) \
         -> "tuple[int, int, np.ndarray, int, int, list[int]]":
     """One fused pass over every (fixed order, partition order,
-    partition, Rice parameter) choice of a subframe — ``_plan_residual``
-    for all five orders at once, vectorized (r14, guide §4.2: hand
+    partition, Rice parameter) choice of a subframe — the scalar
+    per-order residual planner for all five orders at once, vectorized (r14, guide §4.2: hand
     whole arrays to numpy instead of looping in Python). Returns
     (bits, order, us, porder, method, params).
 

@@ -4,7 +4,15 @@ The pattern for image/audio/video at 100 TB: store media as an opaque
 ``binary`` column next to typed metadata, and run decode / feature
 extraction as Arrow-batched pandas functions over ``mapInPandas`` —
 Python touches each batch once, the plan stays distributed, and the
-binary bytes never hit the driver.
+binary bytes never hit the driver. Two helpers own that loop, so each
+operator keeps only what makes it different:
+
+- ``_encode_docs(docs, encode)``: documents → (doc_id, payload). Every
+  fixture writer (``attach_*_payload``) is one per-text ``encode``.
+- ``_map_rows(frame, cols, schema, rows)``: every decode-side mapper
+  (``image_pixel_stats``, ``image_dhash``, ``audio_stats``,
+  ``video_pixel_stats``, ...) is one per-row ``rows`` function yielding
+  output tuples in ``schema`` order; pandas dtypes come from ``schema``.
 
 Decode is REAL for binary netpbm (PPM ``P6`` / PGM ``P5``),
 uncompressed 24-bit BMP, 8-bit PNG (stdlib zlib inflate + pure-integer
@@ -19,17 +27,16 @@ libraries (MP4/H.26x, progressive JPEG, lossy audio) still raise
 NotImplementedError: this container has none, and on a real cluster
 that branch is where PIL/libvips/ffmpeg plug in. The generic
 ``extract_features`` frame operators additionally run on md5-derived
-fake metadata — their outputs are pure functions of the payload hash,
-keeping the pipeline oracle-checkable end-to-end while the Spark-side
-plumbing (schema, Arrow batch shape, UDF signatures, partition
-behavior) stays real and tested.
+fake metadata — pure column expressions over the payload hash,
+keeping the pipeline oracle-checkable end-to-end.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,20 +57,65 @@ from etl_validator_github_spark.scale.flac import (
     decode_flac,
     encode_flac,
 )
+from etl_validator_github_spark.scale.jpeg import (
+    IDCT_HALF,
+    IDCT_SHIFT,
+    IDCT_W,
+    QUANT_LUMA,
+    ZIGZAG,
+    decode_jpeg,
+    encode_gray_coefficients,
+)
 
 PAYLOAD_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("payload", BinaryType()),
 ])
 
-FEATURE_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("n_bytes", LongType()),
-    StructField("content_hash", StringType()),
-    StructField("fake_width", IntegerType()),
-    StructField("fake_height", IntegerType()),
-    StructField("fake_n_frames", IntegerType()),
-])
+#: pandas dtype of each Spark type a row mapper's schema may declare.
+_PD_DTYPE = {"bigint": "int64", "int": "int32", "string": "object"}
+
+
+def _h32(text: str) -> int:
+    """The first 8 hex digits of md5(UTF-8 text) as an integer — the
+    seed of every fixture formula (the oracles' ``CAST(concat('0x',
+    substring(md5(text), 1, 8)) AS BIGINT)``)."""
+    return int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8], 16)
+
+
+def _encode_docs(docs: DataFrame,
+                 encode: Callable[[str], bytes]) -> DataFrame:
+    """documents → (doc_id, payload binary): ``encode(text)`` per row in
+    one Arrow-batched mapInPandas pass. Every fixture writer is this
+    loop with its own ``encode``."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
+                                "payload": [encode(t) for t in pdf["text"]]})
+
+    return docs.select("doc_id", "text").mapInPandas(run, PAYLOAD_SCHEMA)
+
+
+def _map_rows(frame: DataFrame, cols: "list[str]", schema: StructType,
+              rows: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """The row-mapper loop: per input row, ``rows(*row[cols])`` yields
+    zero or more output tuples in ``schema`` order. Fan-out stays inside
+    the Arrow batch, so output partitioning follows the input (no
+    shuffle); pandas dtypes come from ``schema``, so an empty batch
+    still carries them."""
+    dtypes = [_PD_DTYPE[f.dataType.simpleString()] for f in schema]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [t for vals in zip(*(pdf[c] for c in cols))
+                   for t in rows(*vals)]
+            yield pd.DataFrame({
+                f.name: pd.Series([t[i] for t in out], dtype=dt)
+                for i, (f, dt) in enumerate(zip(schema, dtypes))
+            })
+
+    return frame.select(*cols).mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -833,7 +885,6 @@ def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
     if head == b"GI":
         return decode_gif(payload)
     if head == b"\xFF\xD8":
-        from etl_validator_github_spark.scale.jpeg import decode_jpeg
         return decode_jpeg(payload)
     raise NotImplementedError(
         f"no codec for image format {head!r}: only binary netpbm "
@@ -882,25 +933,21 @@ def attach_image_payload(docs: DataFrame, brighten: int = 0) -> DataFrame:
     changes, perceptual structure survives (used by the dHash near-dup
     fixture below).
     """
+    return _encode_docs(
+        docs, lambda t: encode_ppm(*_synth_raster(t, brighten)))
 
-    def to_ppm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_ppm(*_synth_raster(text, brighten))
-                for text in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return docs.select("doc_id", "text").mapInPandas(to_ppm, PAYLOAD_SCHEMA)
+def _fixture_dims(h32: int) -> tuple[int, int]:
+    """Image-fixture (width, height) from the md5 prefix."""
+    return 1 + h32 % IMG_W_MOD, 1 + h32 % IMG_H_MOD
 
 
 def _synth_raster(text: str, brighten: int = 0) -> tuple[int, int, bytes]:
     """The md5-derived (width, height, raster) synthesis formula shared
     by every image-fixture writer — one formula, several wire formats,
     one oracle."""
-    h32 = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8], 16)
-    w = 1 + h32 % IMG_W_MOD
-    h = 1 + h32 % IMG_H_MOD
+    h32 = _h32(text)
+    w, h = _fixture_dims(h32)
     raster = bytes(
         min((h32 + PIXEL_STRIDE * i) % 256 + brighten, 255)
         for i in range(w * h * 3)
@@ -914,15 +961,7 @@ def attach_image_payload_bmp(docs: DataFrame) -> DataFrame:
     ``encode_bmp`` — the bytes on the wire are genuine uncompressed
     24-bit BMP files, bottom-up BGR rows with stride padding the
     decoder must undo."""
-
-    def to_bmp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_bmp(*_synth_raster(text)) for text in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id", "text").mapInPandas(to_bmp, PAYLOAD_SCHEMA)
+    return _encode_docs(docs, lambda t: encode_bmp(*_synth_raster(t)))
 
 
 def attach_image_payload_png(docs: DataFrame) -> DataFrame:
@@ -931,15 +970,7 @@ def attach_image_payload_png(docs: DataFrame) -> DataFrame:
     ``encode_png`` — genuine zlib-compressed PNGs whose per-row filter
     types cycle None/Sub/Up/Average/Paeth, so the gate exercises every
     unfilter branch of the decoder on every image taller than 4 rows."""
-
-    def to_png(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(*_synth_raster(text)) for text in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id", "text").mapInPandas(to_png, PAYLOAD_SCHEMA)
+    return _encode_docs(docs, lambda t: encode_png(*_synth_raster(t)))
 
 
 def attach_image_payload_gif(docs: DataFrame) -> DataFrame:
@@ -948,15 +979,7 @@ def attach_image_payload_gif(docs: DataFrame) -> DataFrame:
     ``encode_gif`` — genuine LZW-compressed single-frame GIFs whose
     palettes are the image's distinct triples (≤192 pixels per fixture
     image, so the 256-entry ceiling always holds)."""
-
-    def to_gif(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_gif(*_synth_raster(text)) for text in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id", "text").mapInPandas(to_gif, PAYLOAD_SCHEMA)
+    return _encode_docs(docs, lambda t: encode_gif(*_synth_raster(t)))
 
 
 #: JPEG fixture: the md5-derived determinism lives in the QUANTIZED
@@ -986,6 +1009,14 @@ def _synth_jpeg_blocks(h32: int, w: int, h: int) -> "list[list[int]]":
     return blocks
 
 
+def _jpeg_gray(seed: int, w: int, h: int) -> bytes:
+    """One fixture JPEG: ``_synth_jpeg_blocks(seed)`` coefficients coded
+    with the Annex K luminance table and a 2-MCU restart interval."""
+    qz = [QUANT_LUMA[ZIGZAG[k]] for k in range(64)]
+    return encode_gray_coefficients(w, h, _synth_jpeg_blocks(seed, w, h),
+                                    qz, restart_interval=JPEG_RESTART)
+
+
 def attach_image_payload_jpeg(docs: DataFrame) -> DataFrame:
     """documents → (doc_id, payload binary): a REAL grayscale baseline
     JPEG per doc. Dims reuse the fixture geometry (1 + h32 % {W/H});
@@ -993,30 +1024,12 @@ def attach_image_payload_jpeg(docs: DataFrame) -> DataFrame:
     note), written through ``encode_gray_coefficients`` with the Annex
     K luminance table and a 2-MCU restart interval — the wire bytes
     are genuine Huffman-coded, byte-stuffed, restart-marked JPEG."""
-    from etl_validator_github_spark.scale.jpeg import (
-        QUANT_LUMA,
-        ZIGZAG,
-        encode_gray_coefficients,
-    )
 
-    qz = [QUANT_LUMA[ZIGZAG[k]] for k in range(64)]
+    def to_jpeg(text: str) -> bytes:
+        h32 = _h32(text)
+        return _jpeg_gray(h32, *_fixture_dims(h32))
 
-    def to_jpeg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h32 = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8],
-                          16)
-                w = 1 + h32 % IMG_W_MOD
-                h = 1 + h32 % IMG_H_MOD
-                payloads.append(encode_gray_coefficients(
-                    w, h, _synth_jpeg_blocks(h32, w, h), qz,
-                    restart_interval=JPEG_RESTART,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id", "text").mapInPandas(to_jpeg, PAYLOAD_SCHEMA)
+    return _encode_docs(docs, to_jpeg)
 
 
 def image_pixel_stats(payloads: DataFrame) -> DataFrame:
@@ -1027,54 +1040,27 @@ def image_pixel_stats(payloads: DataFrame) -> DataFrame:
     ((1000 * channel total) div (channels * n_pixels)). Arrow-batched
     mapInPandas; numpy does the per-image channel folds.
     """
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in PIXEL_STATS_SCHEMA}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, nch, raster = decode_image(bytes(payload))
-                a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                if nch == 4:
-                    # RGBA: stats are over the color planes; alpha is
-                    # opacity metadata, not luminance.
-                    a = a.reshape(-1, 4)[:, :3].reshape(-1)
-                    nch = 3
-                if nch == 3:
-                    sums = (int(a[0::3].sum()), int(a[1::3].sum()),
-                            int(a[2::3].sum()))
-                else:
-                    s = int(a.sum())
-                    sums = (s, s, s)
-                n_px = w * h
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(n_px)
-                out["sum_r"].append(sums[0])
-                out["sum_g"].append(sums[1])
-                out["sum_b"].append(sums[2])
-                out["min_byte"].append(int(a.min()))
-                out["max_byte"].append(int(a.max()))
-                out["mean_luma_milli"].append(
-                    (1000 * sum(sums)) // (3 * n_px)
-                )
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "width": pd.Series(out["width"], dtype="int32"),
-                "height": pd.Series(out["height"], dtype="int32"),
-                "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                "min_byte": pd.Series(out["min_byte"], dtype="int32"),
-                "max_byte": pd.Series(out["max_byte"], dtype="int32"),
-                "mean_luma_milli": pd.Series(
-                    out["mean_luma_milli"], dtype="int64"
-                ),
-            })
+    def stats(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        w, h, nch, raster = decode_image(bytes(payload))
+        a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
+        if nch == 4:
+            # RGBA: stats are over the color planes; alpha is opacity
+            # metadata, not luminance.
+            a = a.reshape(-1, 4)[:, :3].reshape(-1)
+            nch = 3
+        if nch == 3:
+            sums = (int(a[0::3].sum()), int(a[1::3].sum()),
+                    int(a[2::3].sum()))
+        else:
+            s = int(a.sum())
+            sums = (s, s, s)
+        n_px = w * h
+        yield (doc_id, w, h, n_px, *sums, int(a.min()), int(a.max()),
+               (1000 * sum(sums)) // (3 * n_px))
 
-    return payloads.mapInPandas(stats, PIXEL_STATS_SCHEMA)
+    return _map_rows(payloads, ["doc_id", "payload"], PIXEL_STATS_SCHEMA,
+                     stats)
 
 
 def attach_payload(docs: DataFrame) -> DataFrame:
@@ -1083,15 +1069,7 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     Payload is the UTF-8 document text — a deterministic stand-in for
     image bytes that keeps the pipeline verifiable.
     """
-
-    def to_payload(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": pdf["text"].map(lambda s: s.encode("utf-8")),
-            })
-
-    return docs.select("doc_id", "text").mapInPandas(to_payload, PAYLOAD_SCHEMA)
+    return _encode_docs(docs, lambda t: t.encode("utf-8"))
 
 
 def extract_features(payloads: DataFrame) -> DataFrame:
@@ -1099,31 +1077,19 @@ def extract_features(payloads: DataFrame) -> DataFrame:
 
     Width/height/frame-count derive from the payload md5, standing in
     for a real decoder's outputs (dimension probe, frame sampling).
+    Pure column expressions: no Python worker.
     """
+    md5 = F.md5("payload")
+    h32 = F.conv(F.substring(md5, 1, 8), 16, 10).cast("bigint")
+    return payloads.select(
+        "doc_id",
+        F.length("payload").cast("bigint").alias("n_bytes"),
+        md5.alias("content_hash"),
+        (1 + h32 % 1920).cast("int").alias("fake_width"),
+        (1 + h32 % 1080).cast("int").alias("fake_height"),
+        (1 + h32 % 16).cast("int").alias("fake_n_frames"),
+    )
 
-    def features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = pdf["payload"].map(lambda b: hashlib.md5(bytes(b)).hexdigest())
-            h32 = hashes.map(lambda h: int(h[:8], 16))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bytes": pdf["payload"].map(len).astype("int64"),
-                "content_hash": hashes,
-                "fake_width": (1 + h32 % 1920).astype("int32"),
-                "fake_height": (1 + h32 % 1080).astype("int32"),
-                "fake_n_frames": (1 + h32 % 16).astype("int32"),
-            })
-
-    return payloads.mapInPandas(features, FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("out_width", IntegerType()),
-    StructField("out_height", IntegerType()),
-    StructField("scale_num", LongType()),   # exact rational scale =
-    StructField("scale_den", LongType()),   # target / max(w, h)
-])
 
 TARGET_EDGE = 256
 
@@ -1133,28 +1099,22 @@ def resize_images(features: DataFrame, target_edge: int = TARGET_EDGE) -> DataFr
     REAL decoded dimensions from ``image_pixel_stats``.
 
     Computes the exact output geometry a resampler uses, as integer
-    arithmetic (floor(dim * target / long_edge)), batch-wise over Arrow.
+    arithmetic (floor(dim * target / long_edge)) in column expressions.
     The pixel resampling pass itself would slot in beside this math once
     a codec/resampler library exists; scale is carried as an exact
     rational (target/long_edge) so downstream stays engine-exact.
     """
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            w = pdf["width"].astype("int64")
-            h = pdf["height"].astype("int64")
-            long_edge = w.combine(h, max)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "out_width": (w * target_edge // long_edge).astype("int32"),
-                "out_height": (h * target_edge // long_edge).astype("int32"),
-                "scale_num": pd.Series([target_edge] * len(pdf)).astype("int64"),
-                "scale_den": long_edge,
-            })
-
+    t = int(target_edge)
+    long_edge = "greatest(CAST(width AS BIGINT), CAST(height AS BIGINT))"
     return features.select(
-        "doc_id", "width", "height"
-    ).mapInPandas(resize, RESIZED_SCHEMA)
+        "doc_id",
+        F.expr(f"div(CAST(width AS BIGINT) * {t}, {long_edge})")
+        .cast("int").alias("out_width"),
+        F.expr(f"div(CAST(height AS BIGINT) * {t}, {long_edge})")
+        .cast("int").alias("out_height"),
+        F.lit(t).cast("bigint").alias("scale_num"),
+        F.expr(long_edge).alias("scale_den"),
+    )
 
 
 FRAME_SCHEMA = StructType([
@@ -1175,27 +1135,12 @@ def sample_frames(features: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
     follows the parent payload (no shuffle).
     """
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, hashes = [], [], []
-            for doc_id, n, chash in zip(
-                pdf["doc_id"], pdf["fake_n_frames"], pdf["content_hash"]
-            ):
-                for i in range(0, int(n), stride):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    hashes.append(
-                        hashlib.md5(f"{chash}|{i}".encode()).hexdigest()
-                    )
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "frame_hash": pd.Series(hashes, dtype="object"),
-            })
+    def frames(doc_id: int, n: int, chash: str) -> Iterator[tuple]:
+        for i in range(0, int(n), stride):
+            yield doc_id, i, hashlib.md5(f"{chash}|{i}".encode()).hexdigest()
 
-    return features.select(
-        "doc_id", "fake_n_frames", "content_hash"
-    ).mapInPandas(frames, FRAME_SCHEMA)
+    return _map_rows(features, ["doc_id", "fake_n_frames", "content_hash"],
+                     FRAME_SCHEMA, frames)
 
 
 def frame_dedup_stats(frames: DataFrame) -> DataFrame:
@@ -1267,39 +1212,25 @@ def image_dhash(payloads: DataFrame) -> DataFrame:
     bit[gy*8+gx] = 1 iff luma(gy, gx+1) > luma(gy, gx) on the 9×8
     point-sampled integer luma grid (luma = (r+g+b)//3).
     """
-    import numpy as np
 
-    def dh(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, chashes = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload)
-                w, h, nch, raster = decode_image(data)
-                a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                if nch == 3:
-                    luma = (a[0::3] + a[1::3] + a[2::3]) // 3
-                else:
-                    luma = a
-                xs = [gx * w // DHASH_GRID_W for gx in range(DHASH_GRID_W)]
-                ys = [gy * h // DHASH_GRID_H for gy in range(DHASH_GRID_H)]
-                grid = [[int(luma[y * w + x]) for x in xs] for y in ys]
-                d = 0
-                for gy in range(DHASH_GRID_H):
-                    for gx in range(DHASH_GRID_W - 1):
-                        if grid[gy][gx + 1] > grid[gy][gx]:
-                            d |= 1 << (gy * 8 + gx)
-                if d >= 1 << 63:
-                    d -= 1 << 64
-                ids.append(doc_id)
-                hashes.append(d)
-                chashes.append(hashlib.md5(data).hexdigest())
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "dhash": pd.Series(hashes, dtype="int64"),
-                "content_hash": pd.Series(chashes, dtype="object"),
-            })
+    def dh(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        data = bytes(payload)
+        w, h, nch, raster = decode_image(data)
+        a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
+        luma = (a[0::3] + a[1::3] + a[2::3]) // 3 if nch == 3 else a
+        xs = [gx * w // DHASH_GRID_W for gx in range(DHASH_GRID_W)]
+        ys = [gy * h // DHASH_GRID_H for gy in range(DHASH_GRID_H)]
+        grid = [[int(luma[y * w + x]) for x in xs] for y in ys]
+        d = 0
+        for gy in range(DHASH_GRID_H):
+            for gx in range(DHASH_GRID_W - 1):
+                if grid[gy][gx + 1] > grid[gy][gx]:
+                    d |= 1 << (gy * 8 + gx)
+        if d >= 1 << 63:
+            d -= 1 << 64
+        yield doc_id, d, hashlib.md5(data).hexdigest()
 
-    return payloads.mapInPandas(dh, DHASH_SCHEMA)
+    return _map_rows(payloads, ["doc_id", "payload"], DHASH_SCHEMA, dh)
 
 
 #: Segment buckets beyond this population are dropped before pair
@@ -1372,29 +1303,15 @@ def dhash_neardup_pairs(docs: DataFrame,
     )
 
 
-def _multimodal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return image_pixel_stats(attach_image_payload(docs))
+def _decoded(stats: Callable[[DataFrame], DataFrame],
+             attach: Callable[[DataFrame], DataFrame]):
+    """Catalog builder: documents → ``attach`` fixture payloads →
+    ``stats``."""
 
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return stats(attach(load(spark, sf_dir, "documents")))
 
-def _multimodal_bmp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return image_pixel_stats(attach_image_payload_bmp(docs))
-
-
-def _multimodal_png_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return image_pixel_stats(attach_image_payload_png(docs))
-
-
-def _multimodal_gif_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return image_pixel_stats(attach_image_payload_gif(docs))
-
-
-def _multimodal_jpeg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return image_pixel_stats(attach_image_payload_jpeg(docs))
+    return build
 
 
 def _resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1901,46 +1818,31 @@ def attach_audio_payload_adpcm(docs: DataFrame) -> DataFrame:
     and a decoder bug (wrong clamp, wrong table row, swapped nibble
     order, missing header sample) breaks the hash match."""
 
-    def to_adpcm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h32 = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8],
-                          16)
-                nblocks = 1 + h32 % ADPCM_BLOCK_MOD
-                nbytes = ADPCM_BYTES_MIN + h32 % ADPCM_BYTES_MOD
-                blocks = []
-                for b in range(nblocks):
-                    pred0 = (h32 + 97 * b) % 4096 - 2048
-                    idx0 = (h32 + 17 * b) % 89
-                    nibs = [(h32 + 13 * (b * 2 * nbytes + j)) % 16
-                            for j in range(2 * nbytes)]
-                    blocks.append((pred0, idx0, nibs))
-                payloads.append(encode_wav_adpcm(AUDIO_RATE, blocks))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def to_adpcm(text: str) -> bytes:
+        h32 = _h32(text)
+        nbytes = ADPCM_BYTES_MIN + h32 % ADPCM_BYTES_MOD
+        blocks = [
+            ((h32 + 97 * b) % 4096 - 2048, (h32 + 17 * b) % 89,
+             [(h32 + 13 * (b * 2 * nbytes + j)) % 16
+              for j in range(2 * nbytes)])
+            for b in range(1 + h32 % ADPCM_BLOCK_MOD)
+        ]
+        return encode_wav_adpcm(AUDIO_RATE, blocks)
 
-    return docs.select("doc_id", "text").mapInPandas(to_adpcm, PAYLOAD_SCHEMA)
+    return _encode_docs(docs, to_adpcm)
 
 
 def attach_audio_payload(docs: DataFrame) -> DataFrame:
     """documents → (doc_id, payload binary): a REAL PCM16 WAV per doc,
     waveform a pure function of md5(text) (see the section note)."""
 
-    def to_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h32 = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8],
-                          16)
-                n = AUDIO_MIN_SAMPLES + h32 % AUDIO_N_MOD
-                samples = [(h32 + AUDIO_STRIDE * i) % 4096 - 2048
-                           for i in range(n)]
-                payloads.append(encode_wav(AUDIO_RATE, samples))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def to_wav(text: str) -> bytes:
+        h32 = _h32(text)
+        n = AUDIO_MIN_SAMPLES + h32 % AUDIO_N_MOD
+        return encode_wav(AUDIO_RATE, [(h32 + AUDIO_STRIDE * i) % 4096 - 2048
+                                       for i in range(n)])
 
-    return docs.select("doc_id", "text").mapInPandas(to_wav, PAYLOAD_SCHEMA)
+    return _encode_docs(docs, to_wav)
 
 
 AUDIO_STATS_SCHEMA = StructType([
@@ -1954,50 +1856,26 @@ AUDIO_STATS_SCHEMA = StructType([
 ])
 
 
+def _signal_stats(doc_id: int, rate: int, samples) -> tuple:
+    """One ``AUDIO_STATS_SCHEMA`` row: sample count, peak |x|, exact
+    integer |x| sum and x² energy, mean |x| in exact milli units."""
+    a = np.asarray(samples, dtype=np.int64)
+    sum_abs = int(np.abs(a).sum())
+    return (doc_id, len(a), rate, int(np.abs(a).max()), sum_abs,
+            int((a * a).sum()), (1000 * sum_abs) // len(a))
+
+
 def audio_stats(payloads: DataFrame) -> DataFrame:
     """Binary WAV payload → true signal statistics via the real decoder:
     sample count, peak |amplitude|, exact integer |x| sum and x² energy,
     mean |x| in exact milli units. Arrow-batched mapInPandas, map-only."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in AUDIO_STATS_SCHEMA}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, _, samples = decode_audio(bytes(payload))
-                a = np.asarray(samples, dtype=np.int64)
-                sum_abs = int(np.abs(a).sum())
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(samples))
-                out["sample_rate"].append(rate)
-                out["peak_abs"].append(int(np.abs(a).max()))
-                out["sum_abs"].append(sum_abs)
-                out["energy"].append(int((a * a).sum()))
-                out["mean_abs_milli"].append(
-                    (1000 * sum_abs) // len(samples)
-                )
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "n_samples": pd.Series(out["n_samples"], dtype="int32"),
-                "sample_rate": pd.Series(out["sample_rate"], dtype="int32"),
-                "peak_abs": pd.Series(out["peak_abs"], dtype="int32"),
-                "sum_abs": pd.Series(out["sum_abs"], dtype="int64"),
-                "energy": pd.Series(out["energy"], dtype="int64"),
-                "mean_abs_milli": pd.Series(out["mean_abs_milli"],
-                                            dtype="int64"),
-            })
+    def stats(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        rate, _, samples = decode_audio(bytes(payload))
+        yield _signal_stats(doc_id, rate, samples)
 
-    return payloads.mapInPandas(stats, AUDIO_STATS_SCHEMA)
-
-
-def _audio_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return audio_stats(attach_audio_payload(docs))
-
-
-def _adpcm_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return audio_stats(attach_audio_payload_adpcm(docs))
+    return _map_rows(payloads, ["doc_id", "payload"], AUDIO_STATS_SCHEMA,
+                     stats)
 
 
 #: μ-law fixture: companded byte i = (h32 + 29·i) % 256 — the payload
@@ -2011,26 +1889,13 @@ def attach_audio_payload_mulaw(docs: DataFrame) -> DataFrame:
     (format 7, mono 8-bit) per doc; sample count reuses the PCM
     fixture geometry."""
 
-    def to_mulaw(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h32 = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8],
-                          16)
-                n = AUDIO_MIN_SAMPLES + h32 % AUDIO_N_MOD
-                enc = bytes((h32 + MULAW_STRIDE * i) % 256
-                            for i in range(n))
-                payloads.append(encode_wav_g711(AUDIO_RATE, enc, "mulaw"))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def to_mulaw(text: str) -> bytes:
+        h32 = _h32(text)
+        n = AUDIO_MIN_SAMPLES + h32 % AUDIO_N_MOD
+        enc = bytes((h32 + MULAW_STRIDE * i) % 256 for i in range(n))
+        return encode_wav_g711(AUDIO_RATE, enc, "mulaw")
 
-    return docs.select("doc_id", "text").mapInPandas(to_mulaw,
-                                                     PAYLOAD_SCHEMA)
-
-
-def _mulaw_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return audio_stats(attach_audio_payload_mulaw(docs))
+    return _encode_docs(docs, to_mulaw)
 
 
 # The oracle expands each regenerated companded byte with the G.711
@@ -2086,34 +1951,19 @@ def attach_audio_payload_flac(docs: DataFrame) -> DataFrame:
     waveform), right[i] = (h32 + FLAC_STRIDE_R·i) % 4096 − 2048;
     encoded mid/side with 192-sample frames (1–2 frames per doc)."""
 
-    import numpy as np
+    def to_flac(text: str) -> bytes:
+        h32 = _h32(text)
+        # Closed-form channels vectorized: exact int64 arithmetic,
+        # interleaved L/R by column stacking.
+        i = np.arange(AUDIO_MIN_SAMPLES + h32 % AUDIO_N_MOD, dtype=np.int64)
+        inter = np.column_stack((
+            (h32 + AUDIO_STRIDE * i) % 4096 - 2048,
+            (h32 + FLAC_STRIDE_R * i) % 4096 - 2048,
+        )).ravel()
+        return encode_flac(AUDIO_RATE, inter, channels=2,
+                           stereo_mode="mid_side")
 
-    def to_flac(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h32 = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8],
-                          16)
-                n = AUDIO_MIN_SAMPLES + h32 % AUDIO_N_MOD
-                # Closed-form channels vectorized (r14): exact int64
-                # arithmetic, interleaved L/R by column stacking.
-                i = np.arange(n, dtype=np.int64)
-                inter = np.column_stack((
-                    (h32 + AUDIO_STRIDE * i) % 4096 - 2048,
-                    (h32 + FLAC_STRIDE_R * i) % 4096 - 2048,
-                )).ravel()
-                payloads.append(encode_flac(AUDIO_RATE, inter, channels=2,
-                                            stereo_mode="mid_side"))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id", "text").mapInPandas(to_flac,
-                                                     PAYLOAD_SCHEMA)
-
-
-def _flac_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return audio_stats(attach_audio_payload_flac(docs))
+    return _encode_docs(docs, to_flac)
 
 
 # Lossless codec ⇒ the oracle is the fixture waveform itself: both
@@ -2266,25 +2116,15 @@ def audio_frame_energies(payloads: DataFrame) -> DataFrame:
     exact Σx² energy (the final frame may be partial). Decode + frame
     fold stay inside Arrow batches; everything downstream is plain
     DataFrame ops — the decoded-media-to-relational handoff shape."""
-    import numpy as np
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, energies = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, samples = decode_audio(bytes(payload))
-                a = np.asarray(samples, dtype=np.int64)
-                for fi in range(0, len(a), VAD_FRAME):
-                    ids.append(doc_id)
-                    idxs.append(fi // VAD_FRAME)
-                    energies.append(int((a[fi:fi + VAD_FRAME] ** 2).sum()))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "frame_energy": pd.Series(energies, dtype="int64"),
-            })
+    def frames(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        _, _, samples = decode_audio(bytes(payload))
+        a = np.asarray(samples, dtype=np.int64)
+        for fi in range(0, len(a), VAD_FRAME):
+            yield doc_id, fi // VAD_FRAME, int((a[fi:fi + VAD_FRAME] ** 2).sum())
 
-    return payloads.mapInPandas(frames, AUDIO_FRAME_SCHEMA)
+    return _map_rows(payloads, ["doc_id", "payload"], AUDIO_FRAME_SCHEMA,
+                     frames)
 
 
 def audio_vad_segments(payloads: DataFrame) -> DataFrame:
@@ -2324,11 +2164,6 @@ def audio_vad_segments(payloads: DataFrame) -> DataFrame:
         F.sum(F.when(is_run, F.col("e_sum")).otherwise(F.lit(0)))
         .alias("voiced_energy"),
     )
-
-
-def _audio_vad_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return audio_vad_segments(attach_audio_payload(docs))
 
 
 _AUDIO_VAD_SQL = f"""
@@ -2378,41 +2213,14 @@ def audio_downsample_stats(payloads: DataFrame) -> DataFrame:
     """Strided decimation (every AUDIO_DECIM-th sample — the audio
     analogue of video frame sampling) followed by the same exact-integer
     stats over the kept samples. Map-only inside Arrow batches."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in AUDIO_STATS_SCHEMA}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, _, samples = decode_audio(bytes(payload))
-                kept = np.asarray(samples[::AUDIO_DECIM], dtype=np.int64)
-                sum_abs = int(np.abs(kept).sum())
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(kept))
-                out["sample_rate"].append(rate // AUDIO_DECIM)
-                out["peak_abs"].append(int(np.abs(kept).max()))
-                out["sum_abs"].append(sum_abs)
-                out["energy"].append(int((kept * kept).sum()))
-                out["mean_abs_milli"].append(
-                    (1000 * sum_abs) // len(kept)
-                )
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "n_samples": pd.Series(out["n_samples"], dtype="int32"),
-                "sample_rate": pd.Series(out["sample_rate"], dtype="int32"),
-                "peak_abs": pd.Series(out["peak_abs"], dtype="int32"),
-                "sum_abs": pd.Series(out["sum_abs"], dtype="int64"),
-                "energy": pd.Series(out["energy"], dtype="int64"),
-                "mean_abs_milli": pd.Series(out["mean_abs_milli"],
-                                            dtype="int64"),
-            })
+    def stats(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        rate, _, samples = decode_audio(bytes(payload))
+        yield _signal_stats(doc_id, rate // AUDIO_DECIM,
+                            samples[::AUDIO_DECIM])
 
-    return payloads.mapInPandas(stats, AUDIO_STATS_SCHEMA)
-
-
-def _audio_downsample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return audio_downsample_stats(attach_audio_payload(docs))
+    return _map_rows(payloads, ["doc_id", "payload"], AUDIO_STATS_SCHEMA,
+                     stats)
 
 
 _AUDIO_DOWNSAMPLE_SQL = f"""
@@ -2501,12 +2309,6 @@ def _jpeg_oracle_tables() -> "tuple[str, str, int]":
     """The zz/wt VALUES literals plus the rounding-divide offset shared
     by the JPEG and AVI oracles — generated from scale/jpeg.py's
     constants so decoders and oracles share one source of truth."""
-    from etl_validator_github_spark.scale.jpeg import (
-        IDCT_W,
-        QUANT_LUMA,
-        ZIGZAG,
-    )
-
     zz_rows = ", ".join(
         f"({k}, {ZIGZAG[k] // 8}, {ZIGZAG[k] % 8}, "
         f"{QUANT_LUMA[ZIGZAG[k]]})"
@@ -2519,8 +2321,6 @@ def _jpeg_oracle_tables() -> "tuple[str, str, int]":
 
 
 def _jpeg_sql() -> str:
-    from etl_validator_github_spark.scale.jpeg import IDCT_HALF, IDCT_SHIFT
-
     zz_rows, wt_rows, offset = _jpeg_oracle_tables()
     return f"""
 WITH h AS (
@@ -2686,36 +2486,14 @@ AUDIO_ZCR_SCHEMA = StructType([
 def audio_zcr(payloads: DataFrame) -> DataFrame:
     """Per clip: sample count, sign-flip count ((x ≥ 0) changing
     between neighbors), and 1000·crossings div (n−1)."""
-    import numpy as np
 
-    def zcr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in AUDIO_ZCR_SCHEMA}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, samples = decode_audio(bytes(payload))
-                a = np.asarray(samples, dtype=np.int64)
-                nonneg = a >= 0
-                n_cross = int((nonneg[1:] != nonneg[:-1]).sum())
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(samples))
-                out["n_crossings"].append(n_cross)
-                out["zcr_milli"].append(
-                    (1000 * n_cross) // (len(samples) - 1)
-                    if len(samples) > 1 else 0
-                )
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "n_samples": pd.Series(out["n_samples"], dtype="int32"),
-                "n_crossings": pd.Series(out["n_crossings"], dtype="int32"),
-                "zcr_milli": pd.Series(out["zcr_milli"], dtype="int32"),
-            })
+    def zcr(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        _, _, samples = decode_audio(bytes(payload))
+        nonneg = np.asarray(samples, dtype=np.int64) >= 0
+        n, n_cross = len(samples), int((nonneg[1:] != nonneg[:-1]).sum())
+        yield doc_id, n, n_cross, (1000 * n_cross) // (n - 1) if n > 1 else 0
 
-    return payloads.mapInPandas(zcr, AUDIO_ZCR_SCHEMA)
-
-
-def _audio_zcr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return audio_zcr(attach_audio_payload(docs))
+    return _map_rows(payloads, ["doc_id", "payload"], AUDIO_ZCR_SCHEMA, zcr)
 
 
 _AUDIO_ZCR_SQL = f"""
@@ -2792,36 +2570,15 @@ def attach_video_payload_avi(docs: DataFrame) -> DataFrame:
     the JPEG fixture's closed form under the per-frame seed
     ``(h32 + AVI_FRAME_SEED * (f + 1)) mod 2^32`` — same dims every
     frame, as the container requires."""
-    from etl_validator_github_spark.scale.jpeg import (
-        QUANT_LUMA,
-        ZIGZAG,
-        encode_gray_coefficients,
-    )
 
-    qz = [QUANT_LUMA[ZIGZAG[k]] for k in range(64)]
+    def to_avi(text: str) -> bytes:
+        h32 = _h32(text)
+        w, h = _fixture_dims(h32)
+        frames = [_jpeg_gray(_avi_frame_seed(h32, f), w, h)
+                  for f in range(AVI_FRAMES_MIN + h32 % AVI_FRAMES_MOD)]
+        return encode_avi_mjpeg(w, h, frames, fps=AVI_FPS)
 
-    def to_avi(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h32 = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8],
-                          16)
-                w = 1 + h32 % IMG_W_MOD
-                h = 1 + h32 % IMG_H_MOD
-                n_frames = AVI_FRAMES_MIN + h32 % AVI_FRAMES_MOD
-                frames = [
-                    encode_gray_coefficients(
-                        w, h,
-                        _synth_jpeg_blocks(_avi_frame_seed(h32, f), w, h),
-                        qz, restart_interval=JPEG_RESTART,
-                    )
-                    for f in range(n_frames)
-                ]
-                payloads.append(encode_avi_mjpeg(w, h, frames, fps=AVI_FPS))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id", "text").mapInPandas(to_avi, PAYLOAD_SCHEMA)
+    return _encode_docs(docs, to_avi)
 
 
 def video_pixel_stats(payloads: DataFrame) -> DataFrame:
@@ -2835,61 +2592,29 @@ def video_pixel_stats(payloads: DataFrame) -> DataFrame:
     float MSE). One Arrow batch in, one out; nothing touches the
     driver.
     """
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in VIDEO_STATS_SCHEMA}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, fps, frames = decode_avi(bytes(payload))
-                frame_sums: list[int] = []
-                mn, mx = 255, 0
-                for frame in frames:
-                    fw, fh, nch, raster = decode_image(frame)
-                    if (fw, fh, nch) != (w, h, 1):
-                        raise ValueError(
-                            f"frame geometry {fw}x{fh}x{nch} disagrees "
-                            f"with container {w}x{h}x1")
-                    a = np.frombuffer(raster, dtype=np.uint8)
-                    frame_sums.append(int(a.astype(np.int64).sum()))
-                    mn = min(mn, int(a.min()))
-                    mx = max(mx, int(a.max()))
-                total = sum(frame_sums)
-                n_px = w * h * len(frames)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_frames"].append(len(frames))
-                out["fps"].append(fps)
-                out["n_pixels"].append(n_px)
-                out["sum_luma"].append(total)
-                out["min_byte"].append(mn)
-                out["max_byte"].append(mx)
-                out["mean_luma_milli"].append((1000 * total) // n_px)
-                out["motion_abs"].append(sum(
-                    abs(b - a) for a, b in zip(frame_sums, frame_sums[1:])
-                ))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "width": pd.Series(out["width"], dtype="int32"),
-                "height": pd.Series(out["height"], dtype="int32"),
-                "n_frames": pd.Series(out["n_frames"], dtype="int32"),
-                "fps": pd.Series(out["fps"], dtype="int32"),
-                "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                "sum_luma": pd.Series(out["sum_luma"], dtype="int64"),
-                "min_byte": pd.Series(out["min_byte"], dtype="int32"),
-                "max_byte": pd.Series(out["max_byte"], dtype="int32"),
-                "mean_luma_milli": pd.Series(
-                    out["mean_luma_milli"], dtype="int64"),
-                "motion_abs": pd.Series(out["motion_abs"], dtype="int64"),
-            })
+    def stats(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        w, h, fps, frames = decode_avi(bytes(payload))
+        frame_sums: list[int] = []
+        mn, mx = 255, 0
+        for frame in frames:
+            fw, fh, nch, raster = decode_image(frame)
+            if (fw, fh, nch) != (w, h, 1):
+                raise ValueError(
+                    f"frame geometry {fw}x{fh}x{nch} disagrees "
+                    f"with container {w}x{h}x1")
+            a = np.frombuffer(raster, dtype=np.uint8)
+            frame_sums.append(int(a.astype(np.int64).sum()))
+            mn = min(mn, int(a.min()))
+            mx = max(mx, int(a.max()))
+        total = sum(frame_sums)
+        n_px = w * h * len(frames)
+        yield (doc_id, w, h, len(frames), fps, n_px, total, mn, mx,
+               (1000 * total) // n_px,
+               sum(abs(b - a) for a, b in zip(frame_sums, frame_sums[1:])))
 
-    return payloads.mapInPandas(stats, VIDEO_STATS_SCHEMA)
-
-
-def _avi_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return video_pixel_stats(attach_video_payload_avi(docs))
+    return _map_rows(payloads, ["doc_id", "payload"], VIDEO_STATS_SCHEMA,
+                     stats)
 
 
 def _avi_sql() -> str:
@@ -2897,8 +2622,6 @@ def _avi_sql() -> str:
     frame's coefficients from the per-frame seed, run the decoder's
     exact-integer arithmetic per (doc, frame), then roll frames up to
     the per-video stats including the LAG-window motion sum."""
-    from etl_validator_github_spark.scale.jpeg import IDCT_HALF, IDCT_SHIFT
-
     zz_rows, wt_rows, offset = _jpeg_oracle_tables()
     return f"""
 WITH h AS (
@@ -2989,28 +2712,38 @@ _AVI_SQL = _avi_sql()
 MULTIMODAL_QUERIES: dict[str, Query] = {
     q.name: q
     for q in [
-        Query("multimodal_features", _multimodal_q, _MULTIMODAL_SQL,
+        Query("multimodal_features",
+              _decoded(image_pixel_stats, attach_image_payload),
+              _MULTIMODAL_SQL,
               "True pixel statistics from REAL decode: synthetic P6 PPM "
               "payloads parsed by the pure-Python netpbm codec inside "
               "Arrow-batched mapInPandas; exact-integer channel sums."),
-        Query("multimodal_bmp_stats", _multimodal_bmp_q, _MULTIMODAL_SQL,
+        Query("multimodal_bmp_stats",
+              _decoded(image_pixel_stats, attach_image_payload_bmp),
+              _MULTIMODAL_SQL,
               "The same pixel statistics through the BMP codec: "
               "identical md5-derived pixels written as genuine "
               "uncompressed 24-bit BMP (bottom-up BGR, stride padding) "
               "— same oracle, so the gate pins the decoder itself."),
-        Query("multimodal_png_stats", _multimodal_png_q, _MULTIMODAL_SQL,
+        Query("multimodal_png_stats",
+              _decoded(image_pixel_stats, attach_image_payload_png),
+              _MULTIMODAL_SQL,
               "The same pixel statistics through the PNG codec: "
               "identical md5-derived pixels written as genuine "
               "zlib-compressed non-interlaced PNGs with per-row "
               "filters cycling None/Sub/Up/Average/Paeth — same "
               "oracle, so the gate pins every unfilter branch."),
-        Query("multimodal_gif_stats", _multimodal_gif_q, _MULTIMODAL_SQL,
+        Query("multimodal_gif_stats",
+              _decoded(image_pixel_stats, attach_image_payload_gif),
+              _MULTIMODAL_SQL,
               "The same pixel statistics through the GIF codec: "
               "identical md5-derived pixels written as genuine "
               "LZW-compressed single-frame GIFs (variable-width codes, "
               "CLEAR/EOI, palette mapping) — same oracle, so the gate "
               "pins the LZW decompressor itself."),
-        Query("multimodal_jpeg_stats", _multimodal_jpeg_q, _JPEG_SQL,
+        Query("multimodal_jpeg_stats",
+              _decoded(image_pixel_stats, attach_image_payload_jpeg),
+              _JPEG_SQL,
               "Pixel statistics through the baseline JPEG codec: "
               "md5-derived QUANTIZED COEFFICIENTS (JPEG is lossy in "
               "pixels, exact in coefficients) Huffman-coded into "
@@ -3018,7 +2751,9 @@ MULTIMODAL_QUERIES: dict[str, Query] = {
               "decoder's exact-integer IDCT is mirrored in SQL, so "
               "the gate pins Huffman decode, dequant, zigzag, IDCT "
               "and clamp digit-for-digit."),
-        Query("multimodal_avi_stats", _avi_stats_q, _AVI_SQL,
+        Query("multimodal_avi_stats",
+              _decoded(video_pixel_stats, attach_video_payload_avi),
+              _AVI_SQL,
               "Per-video statistics through a REAL video container: "
               "MJPEG AVIs (strict RIFF parse, scale/avi.py) whose "
               "frames are genuine baseline JPEGs decoded per frame "
@@ -3027,7 +2762,7 @@ MULTIMODAL_QUERIES: dict[str, Query] = {
               "mirror extended with a frame axis."),
         Query("multimodal_resize", _resize_q, _RESIZE_SQL,
               "Aspect-preserving resize geometry over the real decoded "
-              "dimensions (mapInPandas; integer geometry exact)."),
+              "dimensions (column expressions; integer geometry exact)."),
         Query("multimodal_frame_sample", _frames_q, _FRAMES_SQL,
               "Strided video-frame sampling fan-out inside Arrow batches "
               "(no shuffle)."),
@@ -3035,39 +2770,52 @@ MULTIMODAL_QUERIES: dict[str, Query] = {
               "Cross-video frame-hash dedup: per-video fraction of "
               "sampled frames repeated anywhere in the corpus (chunk-"
               "dedup shape on the frame stream)."),
-        Query("multimodal_audio_stats", _audio_stats_q, _AUDIO_STATS_SQL,
+        Query("multimodal_audio_stats",
+              _decoded(audio_stats, attach_audio_payload),
+              _AUDIO_STATS_SQL,
               "True signal statistics from REAL decode: synthetic PCM16 "
               "WAVs parsed by the pure-Python RIFF codec inside Arrow-"
               "batched mapInPandas; exact-integer |x| and x² sums."),
-        Query("multimodal_adpcm_stats", _adpcm_stats_q, _ADPCM_STATS_SQL,
+        Query("multimodal_adpcm_stats",
+              _decoded(audio_stats, attach_audio_payload_adpcm),
+              _ADPCM_STATS_SQL,
               "The same signal statistics through the IMA-ADPCM codec "
               "(WAV format 17): md5-derived nibble streams in genuine "
               "block-structured ADPCM WAVs, decoded by the pure-Python "
               "predictor/step state machine; the oracle re-runs the "
               "decoder in a recursive CTE over the standard tables."),
-        Query("multimodal_mulaw_stats", _mulaw_stats_q, _MULAW_STATS_SQL,
+        Query("multimodal_mulaw_stats",
+              _decoded(audio_stats, attach_audio_payload_mulaw),
+              _MULAW_STATS_SQL,
               "The same signal statistics through G.711 μ-law (WAV "
               "format 7): md5-derived companded bytes in genuine "
               "telephony WAVs, expanded by the standard integer "
               "formula; the oracle re-runs the expansion in SQL."),
-        Query("multimodal_flac_stats", _flac_stats_q, _FLAC_STATS_SQL,
+        Query("multimodal_flac_stats",
+              _decoded(audio_stats, attach_audio_payload_flac),
+              _FLAC_STATS_SQL,
               "The same signal statistics through the FLAC codec "
               "(scale/flac.py): md5-derived STEREO waveforms written "
               "as genuine mid/side FLAC (fixed predictors, Rice "
               "residuals, CRC-8/16, STREAMINFO MD5) and decoded by "
               "the pure-stdlib decoder; lossless, so the oracle is "
               "the closed-form waveform itself."),
-        Query("multimodal_audio_downsample", _audio_downsample_q,
+        Query("multimodal_audio_downsample",
+              _decoded(audio_downsample_stats, attach_audio_payload),
               _AUDIO_DOWNSAMPLE_SQL,
               "Strided audio decimation (8 kHz → 1 kHz, the frame-"
               "sampling shape on the sample stream) with exact-integer "
               "stats over the kept samples."),
-        Query("multimodal_audio_vad", _audio_vad_q, _AUDIO_VAD_SQL,
+        Query("multimodal_audio_vad",
+              _decoded(audio_vad_segments, attach_audio_payload),
+              _AUDIO_VAD_SQL,
               "Energy-gate voice-activity segmentation: per-frame Σx² "
               "from the real decoder, voiced islands via the gaps-and-"
               "islands window, longest-run + exact voiced energy per "
               "doc."),
-        Query("multimodal_audio_zcr", _audio_zcr_q, _AUDIO_ZCR_SQL,
+        Query("multimodal_audio_zcr",
+              _decoded(audio_zcr, attach_audio_payload),
+              _AUDIO_ZCR_SQL,
               "Zero-crossing rate per clip from the real decoder "
               "(numpy signbit diff in mapInPandas); oracle recomputes "
               "from the fixture waveform's closed form."),

@@ -13,7 +13,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from etl_validator_github_spark.scale import dedup, multimodal, similarity
+from etl_validator_github_spark.scale import dedup, flac, multimodal, similarity
 from etl_validator_github_spark.scale.text import LANG_MARKERS, lang_scores
 
 
@@ -2679,12 +2679,11 @@ def test_adpcm_rejects_malformed():
         multimodal.encode_wav_adpcm(8000, [(0, 89, [1, 2])])
 
 
-def test_windowed_hashes_np_equals_expression_plan(spark):
-    """The Arrow byte-slice window-hash twin returns exactly the
-    expression kernel's (doc_id, pos, h) rows — including multi-byte
-    UTF-8 tokens, empty tokens from doubled spaces, and docs shorter
-    than k — and the full spans report is identical through either
-    kernel."""
+def test_span_windows_binary_is_unhex_of_hex(spark):
+    """The binary (unhex) window keys that substring_span_stats groups
+    on are the byte-wise unhex of the hex window hashes — a bijection,
+    so grouping is unchanged — including multi-byte UTF-8 tokens, empty
+    tokens from doubled spaces, and docs shorter than k."""
     texts = [
         "one two three four five six seven eight",   # > k windows
         "héllo wörld ünïcode tokens stretch bytes beyond ascii",
@@ -2696,24 +2695,10 @@ def test_windowed_hashes_np_equals_expression_plan(spark):
     k = 5
     base = dedup._span_base(docs)
     exp = sorted(map(tuple, dedup._span_windows(base, k).collect()))
-    got = sorted(map(tuple, dedup.windowed_hashes_np(base, k).collect()))
-    assert exp == got and len(exp) > 0
-
-    # Binary (unhex) mode: both kernels agree with each other AND are
-    # the byte-wise unhex of the hex mode (bijection, same grouping).
-    exp_b = sorted((d, p, bytes(h)) for d, p, h in
-                   dedup._span_windows(base, k, binary=True).collect())
+    assert len(exp) > 0
     got_b = sorted((d, p, bytes(h)) for d, p, h in
-                   dedup.windowed_hashes_np(base, k, binary=True).collect())
-    assert exp_b == got_b
-    assert exp_b == sorted((d, p, bytes.fromhex(h)) for d, p, h in exp)
-
-    full_exp = sorted(map(tuple,
-                          dedup.substring_span_stats(docs, 5).collect()))
-    full_np = sorted(map(tuple,
-                         dedup.substring_span_stats(
-                             docs, 5, np_windows=True).collect()))
-    assert full_exp == full_np
+                   dedup._span_windows(base, k, binary=True).collect())
+    assert got_b == sorted((d, p, bytes.fromhex(h)) for d, p, h in exp)
 
 
 def test_gif_decode_canonical_and_hand_computed():
@@ -3144,6 +3129,139 @@ def test_flac_encoder_bytes_are_pinned():
     assert digest.hexdigest() == "cec9e4c0818a30a700ab5d2f2c04b5b4"
 
 
+#: Fixed corpus for the fixture byte pins: varied md5 prefixes (so
+#: every image/audio/video geometry branch is hit), multi-byte UTF-8,
+#: a doubled space and the empty string.
+_PIN_TEXTS = [f"doc {i} " + "word " * i for i in range(12)] + [
+    "héllo wörld ünïcode", "a  b c", "short", "",
+]
+
+
+def _pin_mappers():
+    m = multimodal
+    wav = m.attach_audio_payload
+    return {
+        "image_pixel_stats": (
+            lambda d: m.image_pixel_stats(m.attach_image_payload(d)),
+            m.PIXEL_STATS_SCHEMA),
+        "image_pixel_stats_jpeg": (
+            lambda d: m.image_pixel_stats(m.attach_image_payload_jpeg(d)),
+            m.PIXEL_STATS_SCHEMA),
+        "image_dhash": (
+            lambda d: m.image_dhash(m.attach_image_payload(d)),
+            m.DHASH_SCHEMA),
+        "image_dhash_jpeg": (
+            lambda d: m.image_dhash(m.attach_image_payload_jpeg(d)),
+            m.DHASH_SCHEMA),
+        "extract_features": (
+            lambda d: m.extract_features(m.attach_payload(d)), None),
+        "resize_images": (
+            lambda d: m.resize_images(
+                m.image_pixel_stats(m.attach_image_payload(d))), None),
+        "sample_frames": (
+            lambda d: m.sample_frames(
+                m.extract_features(m.attach_payload(d))),
+            m.FRAME_SCHEMA),
+        "audio_stats": (lambda d: m.audio_stats(wav(d)),
+                        m.AUDIO_STATS_SCHEMA),
+        "audio_stats_flac": (
+            lambda d: m.audio_stats(m.attach_audio_payload_flac(d)),
+            m.AUDIO_STATS_SCHEMA),
+        "audio_downsample_stats": (
+            lambda d: m.audio_downsample_stats(wav(d)),
+            m.AUDIO_STATS_SCHEMA),
+        "audio_zcr": (lambda d: m.audio_zcr(wav(d)), m.AUDIO_ZCR_SCHEMA),
+        "audio_frame_energies": (
+            lambda d: m.audio_frame_energies(wav(d)),
+            m.AUDIO_FRAME_SCHEMA),
+        "video_pixel_stats": (
+            lambda d: m.video_pixel_stats(m.attach_video_payload_avi(d)),
+            m.VIDEO_STATS_SCHEMA),
+    }
+
+
+def _pin_writers():
+    m = multimodal
+    return {
+        "attach_payload": m.attach_payload,
+        "attach_image_payload": m.attach_image_payload,
+        "attach_image_payload_brighten": lambda d: m.attach_image_payload(
+            d, brighten=m.DHASH_BRIGHTEN),
+        "attach_image_payload_bmp": m.attach_image_payload_bmp,
+        "attach_image_payload_png": m.attach_image_payload_png,
+        "attach_image_payload_gif": m.attach_image_payload_gif,
+        "attach_image_payload_jpeg": m.attach_image_payload_jpeg,
+        "attach_audio_payload": m.attach_audio_payload,
+        "attach_audio_payload_adpcm": m.attach_audio_payload_adpcm,
+        "attach_audio_payload_mulaw": m.attach_audio_payload_mulaw,
+        "attach_audio_payload_flac": m.attach_audio_payload_flac,
+        "attach_video_payload_avi": m.attach_video_payload_avi,
+    }
+
+
+#: md5 over (schema, sorted rows) of every fixture writer's payloads and
+#: every multimodal row mapper's output on ``_PIN_TEXTS``. A change to
+#: the mapInPandas plumbing must leave all of these untouched; a codec
+#: change that alters bytes must update its digest consciously.
+_FIXTURE_PINS = {
+    "attach_payload": "5b29c4486f74ef21033fcd733e614855",
+    "attach_image_payload": "3716871c84931ba0f9c4a82e66fac591",
+    "attach_image_payload_brighten": "b3c1e667e27e7925cd5cc78dc27f3b5f",
+    "attach_image_payload_bmp": "f528e5093d2fd98481a1417aa8a2b271",
+    "attach_image_payload_png": "51e3451b074fc0392c6103a7edeaed1b",
+    "attach_image_payload_gif": "a181103ad91cda2aaccbe109fdc419a7",
+    "attach_image_payload_jpeg": "7e97dad4a594d88169f01ca2571102df",
+    "attach_audio_payload": "6c96b131fcdec34f133585f9f930a1ec",
+    "attach_audio_payload_adpcm": "59f4a68becd42047827d72aeeb14149c",
+    "attach_audio_payload_mulaw": "e998654c3a5039d5dfdbdac5fac1309c",
+    "attach_audio_payload_flac": "262878260294e79f027f7c0db3ce09d7",
+    "attach_video_payload_avi": "504f8dd2b9f5fd7a1b4488fb20352899",
+    "image_pixel_stats": "d6ce20965cf374160ce29ece09d74641",
+    "image_pixel_stats_jpeg": "2f2abcad707d3996b4e79f79669ebcd2",
+    "image_dhash": "f7c5af011f05f4efa9fb4c9ddc367ecc",
+    "image_dhash_jpeg": "bc684d508b91caca853f3f2ebb6fd5b9",
+    "extract_features": "a7eaaa1cc432c2ba133bc1c56b41e4c0",
+    "resize_images": "ea7c69115df77d128f05254319dbda1c",
+    "sample_frames": "eff061ffe8e0195519df905aba5694b5",
+    "audio_stats": "330da9973a0d3b787fffa852130e5b66",
+    "audio_stats_flac": "7e4110d45b780dc74be8b9b9ab7ed5bc",
+    "audio_downsample_stats": "26fb0ce80ef736c426736d8f3fac9cba",
+    "audio_zcr": "bee58ef7083ed936d3021fc6c4cb87cd",
+    "audio_frame_energies": "778e81e99c7100c951b14b845d989259",
+    "video_pixel_stats": "3fa2951459fa119303a78c39b55e0e6a",
+}
+
+
+def _rows_md5(df) -> str:
+    rows = sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+              for v in r)
+        for r in df.collect()
+    )
+    return hashlib.md5(
+        repr((df.schema.simpleString(), rows)).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("name", sorted(_FIXTURE_PINS))
+def test_multimodal_fixture_bytes_are_pinned(spark, name):
+    """Every fixture writer's payload bytes and every row mapper's rows
+    (schema included) hash to a recorded digest over a fixed corpus."""
+    build = {**_pin_writers(),
+             **{k: f for k, (f, _) in _pin_mappers().items()}}[name]
+    assert _rows_md5(build(_docs(spark, _PIN_TEXTS))) == _FIXTURE_PINS[name]
+
+
+@pytest.mark.parametrize("name", sorted(
+    k for k, (_, schema) in _pin_mappers().items() if schema is not None))
+def test_multimodal_mapper_on_empty_input(spark, name):
+    """A row mapper over zero payloads yields zero rows with exactly its
+    declared output schema."""
+    build, schema = _pin_mappers()[name]
+    out = build(_docs(spark, _PIN_TEXTS).limit(0))
+    assert out.schema == schema
+    assert out.collect() == []
+
+
 def test_flac_compresses_smooth_signals():
     """The fixed-predictor search must actually fire: a pure linear
     ramp (order-2 residuals exactly zero) codes >4x below raw PCM16,
@@ -3163,6 +3281,93 @@ def test_flac_compresses_smooth_signals():
     assert flac.decode_flac(payload) == (8000, 1, saw)
 
 
+#: The scalar FLAC residual planner: the reference scan the fused numpy
+#: planner (flac._plan_subframe_np) must reproduce exactly.
+
+
+def _fixed_residuals(x: "list[int]", order: int) -> "list[int]":
+    coef = flac._FIXED_COEF[order]
+    return [x[i] - sum(c * x[i - 1 - j] for j, c in enumerate(coef))
+            for i in range(order, len(x))]
+
+
+def _plan_residual(res: "list[int]", blocksize: int,
+                   order: int) -> "tuple[int, int, list[int], int]":
+    """Choose (porder, method, per-partition params, total coded bits)
+    minimizing the exact residual size. Partitioning isolates rare
+    large residuals (e.g. a sawtooth wrap) so one spike doesn't drag
+    every sample's Rice parameter up."""
+    us = [flac._zigzag(r) for r in res]  # parameter-independent
+    # Valid porders form a contiguous prefix [0..pmax]: 2^p | blocksize
+    # fails monotonically, and blocksize>>p > order decreases.
+    pmax = 0
+    while (pmax < flac._MAX_PORDER
+           and blocksize % (1 << (pmax + 1)) == 0
+           and (blocksize >> (pmax + 1)) > order):
+        pmax += 1
+    # Rice costs are additive across partitions: Σ(u>>p) tables are
+    # built once per finest partition and pairwise-summed for coarser
+    # levels; ties break on ascending porder.
+    size = blocksize >> pmax
+    levels = [[]]
+    pos = 0
+    for k in range(1 << pmax):
+        cnt = size - (order if k == 0 else 0)
+        seg = us[pos:pos + cnt]
+        # Σ(u>>p) = Σ_{j≥p} B_j·2^(j−p) where B_j counts set bit j
+        # across the segment — one set-bit pass per value plus the
+        # suffix recurrence T[p] = 2·T[p+1] + B[p], instead of 31
+        # full summations. Exact integer identity, same table.
+        bits_hist = [0] * 64
+        for u in seg:
+            while u:
+                low = u & -u
+                bits_hist[low.bit_length() - 1] += 1
+                u ^= low
+        table = [0] * 32
+        acc = 0
+        for j in range(63, 30, -1):
+            acc = (acc << 1) + bits_hist[j]
+        table[31] = acc
+        for p in range(30, -1, -1):
+            table[p] = (table[p + 1] << 1) + bits_hist[p]
+        levels[0].append((table[:31], cnt))
+        pos += cnt
+    for _ in range(pmax):
+        prev = levels[-1]
+        levels.append([
+            ([a + b for a, b in zip(prev[2 * j][0], prev[2 * j + 1][0])],
+             prev[2 * j][1] + prev[2 * j + 1][1])
+            for j in range(len(prev) // 2)
+        ])
+
+    def _best_from_table(s: "list[int]", cnt: int) -> "tuple[int, int]":
+        # The exact first-improvement Rice scan (params 0-30, early
+        # break 8·cnt above the best), on a precomputed Σ(u>>p) table.
+        best_p, best_c = 0, s[0] + cnt
+        for p in range(1, 31):
+            c = s[p] + (1 + p) * cnt
+            if c < best_c:
+                best_p, best_c = p, c
+            elif c > best_c + 8 * cnt:
+                break
+        return best_p, best_c
+
+    best = None
+    for porder in range(pmax + 1):
+        params, bits = [], 0
+        for s, cnt in levels[pmax - porder]:
+            param, rbits = _best_from_table(s, cnt)
+            params.append(param)
+            bits += rbits
+        nparts = 1 << porder
+        method = 1 if max(params) > 14 else 0
+        total = 2 + 4 + nparts * (5 if method else 4) + bits
+        if best is None or total < best[3]:
+            best = (porder, method, params, total)
+    return best
+
+
 def test_flac_fused_planner_matches_scalar_scan():
     """The r14 fused numpy subframe planner (_plan_subframe_np: one
     vectorized pass over every order x porder x partition x Rice
@@ -3174,8 +3379,6 @@ def test_flac_fused_planner_matches_scalar_scan():
     import random
 
     import numpy as np
-
-    from etl_validator_github_spark.scale import flac
 
     rng = random.Random(1405)
     cases = []
@@ -3199,8 +3402,8 @@ def test_flac_fused_planner_matches_scalar_scan():
         n = len(x)
         ref = None
         for order in range(min(4, n - 1) + 1):
-            res = flac._fixed_residuals(x, order)
-            porder, method, params, rbits = flac._plan_residual(
+            res = _fixed_residuals(x, order)
+            porder, method, params, rbits = _plan_residual(
                 res, n, order)
             bits = order * 16 + rbits
             if ref is None or bits < ref[0]:

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F  # noqa: E402
 BLOOM_HELDOUT_DOCS = 10
 
 ALL_OPS = ("gen", "exact", "stats", "bloom", "bloom_strings",
-           "minhash", "spans", "spans_np", "ppjoin", "novelty", "bm25", "curation",
+           "minhash", "spans", "ppjoin", "novelty", "bm25", "curation",
            "sweep", "sweep_expr", "vocab_coverage", "classifier",
            "split_leak", "ivf_index", "epoch_shuffle", "bpe",
            "keeplongest", "rrf", "bm25_delta", "compaction", "ks_drift",
@@ -90,7 +90,7 @@ def _cross_pass(pass_timings, pass_cpus=None):
     is trusted only when the SAME-COMMIT passes' pairs agree within
     1.2× of each other — the box's throttle plateaus last long enough
     for a 1.2× consecutive pair to land inside a slow state
-    (root-cause: MEASURE_1M_r12.jsonl, tools/spans_bisect.py), and
+    (root-cause: MEASURE_1M_r12.jsonl, per-run stage telemetry), and
     only cross-pass disagreement exposes it. Pairless multi-run lists
     compare on their best warm run; single cold runs compare but are
     never committed (basis says why). Keys missing from any pass
@@ -397,17 +397,6 @@ def main() -> int:
             substring_span_stats,
         )
         timed("spans", lambda: force(substring_span_stats(docs)),
-              stable=True)
-
-    if "spans_np" in ops:
-        # The Arrow byte-slice window-hash twin (r13): identical
-        # values (equality-pinned in tests/test_scale.py), measured
-        # here so SCALE.md can record codegen vs Arrow at 1M.
-        from etl_validator_github_spark.scale.dedup import (
-            substring_span_stats,
-        )
-        timed("spans_np",
-              lambda: force(substring_span_stats(docs, np_windows=True)),
               stable=True)
 
     if "novelty" in ops:
