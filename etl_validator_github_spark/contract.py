@@ -65,10 +65,58 @@ TABLES = (
 )
 
 
+#: Declared schema (DDL) of every catalog table whose storage shape is
+#: fixed. Each string parses back to exactly the schema Spark infers from
+#: the testdata, pinned by tests/test_testdata_schema.py.
+SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": (
+        "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
+    ),
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, "
+        "o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, "
+        "n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read one testdata table. Parquet scan → Catalyst gets column
-    pruning + predicate pushdown for free."""
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    """Read one catalog table. Parquet scan → Catalyst gets column
+    pruning + predicate pushdown for free.
+
+    The nine tables in :data:`SCHEMAS` are read with their declared
+    schema, so Spark only lists the file and starts no schema-inference
+    job. ``events`` is inferred on every call: its ``ts`` column really
+    comes in more than one storage shape (timestamp[us] in the testdata,
+    nanos from ``pandas.to_parquet``, Spark's INT96), each of which loads
+    as a different Spark type, and ``queries/relational.py:load_events``
+    branches on the inferred dtype to normalize them to one epoch-µs
+    basis."""
+    reader = spark.read
+    if table in SCHEMAS:
+        reader = reader.schema(SCHEMAS[table])
+    return reader.parquet(f"{sf_dir}/{table}.parquet")
 
 
 def cents(c) -> F.Column:

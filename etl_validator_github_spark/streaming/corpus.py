@@ -26,12 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_validator_github_spark.contract import SCHEMAS
 from etl_validator_github_spark.scale.text import quality_flag
 
-#: Schema of the documents feed (matches testdata documents.parquet).
-DOC_STREAM_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
+#: Schema of the documents feed: the batch loader's declaration, so the
+#: stream and ``contract.load(..., "documents")`` cannot drift apart.
+DOC_STREAM_SCHEMA = SCHEMAS["documents"]
 
 
 def clean_doc_stream(stream: DataFrame, watermark: str | None = None) -> DataFrame:

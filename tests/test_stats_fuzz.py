@@ -11,6 +11,7 @@ surface the driver exercises."""
 
 from __future__ import annotations
 
+import datetime
 import uuid
 
 import pandas as pd
@@ -172,8 +173,11 @@ def test_churn_hazard_matches_km_reference(spark, tmp_path, custs):
             t0 + (span * j) // max(n_orders, 1) for j in range(n_orders)
         })
         for m in months:
+            # A DATE, like the fulfillment fixture: contract.load reads
+            # o_orderdate as the declared TIMESTAMP_NTZ; a parquet DATE
+            # widens to it, a string column is rejected.
             rows.append((len(rows), ck,
-                         f"{1995 + m // 12:04d}-{m % 12 + 1:02d}-15"))
+                         datetime.date(1995 + m // 12, m % 12 + 1, 15)))
     orders = pd.DataFrame(rows,
                           columns=["o_orderkey", "o_custkey", "o_orderdate"])
     sf = _sf_dir(tmp_path, {"orders": orders})
@@ -185,7 +189,7 @@ def test_churn_hazard_matches_km_reference(spark, tmp_path, custs):
     # Pure-Python reference on month indices.
     per_cust = {}
     for _, ck, d in rows:
-        y, mo = int(d[:4]), int(d[5:7])
+        y, mo = d.year, d.month
         idx = y * 12 + mo
         lo, hi = per_cust.get(ck, (idx, idx))
         per_cust[ck] = (min(lo, idx), max(hi, idx))

@@ -5,21 +5,38 @@ changed ``events.ts`` from TIMESTAMP(NANOS) to timestamp[us]; the drift
 surfaced as six scattered AnalysisExceptions instead of one diagnostic.
 This test pins the expected arrow dtype of every column in every table,
 so the NEXT regeneration fails as a single assertion naming the drifted
-column(s).
+column(s). On drift, update the declared schemas in ``contract.SCHEMAS``,
+the load-path normalization in ``queries/relational.py:load_events``, and
+the pins here.
 
 Columns with a known-acceptable set of storage types (``events.ts`` —
 ``load_events`` normalizes both shapes to one epoch-µs basis) list every
 member of that set.
+
+``contract.load`` reads every table except ``events`` with its declared
+schema instead of inferring one. A declared column that is missing from
+a file reads as NULL where an inferred read fails analysis, so
+``test_declared_schemas_match_inferred`` pins each declaration to the
+schema Spark infers, at every scale factor present.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import uuid
+from contextlib import contextmanager
+from itertools import zip_longest
 
+import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
+from etl_validator_github_spark.contract import SCHEMAS, load
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
+#: Every scale factor next to SF_DIR (sf0.001, sf0.01, sf0.1, ...).
+SF_DIRS = sorted(glob.glob(f"{os.path.dirname(SF_DIR)}/sf*"))
 
 # table -> column -> allowed arrow type strings
 EXPECTED: dict[str, dict[str, set[str]]] = {
@@ -116,7 +133,95 @@ def test_testdata_schemas_unchanged():
         for col, got in actual.items():
             drift.append(f"{table}.{col}: UNEXPECTED new column of type {got}")
     assert not drift, (
-        "testdata schema drift detected — update load-path normalization "
-        "(see queries/relational.py:load_events) and this pin:\n  "
+        "testdata schema drift detected — update the declared schemas "
+        "(contract.SCHEMAS), load-path normalization "
+        "(queries/relational.py:load_events) and this pin:\n  "
         + "\n  ".join(drift)
     )
+
+
+def _field_diff(declared, inferred) -> list[str]:
+    """One line per column position where two StructTypes differ. A
+    StructField's repr carries its name, type, nullability and any
+    array containsNull."""
+    return [
+        f"column {i}: declared {d!r}, inferred {f!r}"
+        for i, (d, f) in enumerate(zip_longest(declared, inferred))
+        if d != f
+    ]
+
+
+@pytest.mark.skipif(not SF_DIRS, reason="testdata absent")
+def test_declared_schemas_match_inferred(spark):
+    """Every ``contract.SCHEMAS`` entry parses back to exactly the schema
+    Spark infers from the table at every scale factor: column order,
+    types, nullability and array containsNull included."""
+    drift: list[str] = []
+    for sf in SF_DIRS:
+        for table, ddl in SCHEMAS.items():
+            path = f"{sf}/{table}.parquet"
+            declared = spark.read.schema(ddl).parquet(path).schema
+            inferred = spark.read.parquet(path).schema
+            if declared != inferred:
+                drift.extend(
+                    f"{os.path.basename(sf)} {table} {line}"
+                    for line in _field_diff(declared, inferred)
+                )
+    assert not drift, (
+        "declared schema drifted from the stored table — update "
+        "contract.SCHEMAS (and load_events if events changed):\n  "
+        + "\n  ".join(drift)
+    )
+
+
+@contextmanager
+def _job_ids(spark):
+    """Yield a list that, when the block exits, holds the id of every
+    Spark job the block started (read after draining the listener bus)."""
+    sc = spark.sparkContext
+    group = f"schema-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "contract.load job count")
+    started: list[int] = []
+    try:
+        yield started
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    started.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata absent")
+def test_declared_tables_load_without_a_job(spark):
+    """Loading a declared table lists its file and starts no Spark job;
+    the inferred read of the same file does start one (so the counter
+    sees inference jobs at all)."""
+    started = {}
+    for table in SCHEMAS:
+        with _job_ids(spark) as ids:
+            load(spark, SF_DIR, table)
+        if ids:
+            started[table] = ids
+    assert not started, f"declared loads started jobs: {started}"
+    with _job_ids(spark) as ids:
+        spark.read.parquet(f"{SF_DIR}/region.parquet")
+    assert ids, "an inferred read started no job: the counter is blind"
+
+
+def test_events_still_inferred(spark, tmp_path):
+    """``events`` keeps schema inference: a pandas-written nanos ``ts``
+    loads as BIGINT (under nanosAsLong), the shape load_events branches
+    on."""
+    assert "events" not in SCHEMAS
+    pd.DataFrame({
+        "event_id": [1, 2],
+        "ts": pd.to_datetime([1_700_000_000_000_000, 1_700_000_000_000_001],
+                            unit="us").astype("datetime64[ns]"),
+        "user_id": [7, 7],
+        "event_type": ["view", "click"],
+        "value": [1.0, 2.0],
+        "props": ['{"k": 1}', '{"k": 2}'],
+    }).to_parquet(tmp_path / "events.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    dtypes = dict(load(spark, str(tmp_path), "events").dtypes)
+    assert dtypes["ts"] == "bigint", dtypes
