@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 ROW_ID = "__row_id"
 
@@ -77,8 +78,14 @@ def overwrite_cells(
 
 def widen_to_strings(df: DataFrame) -> DataFrame:
     """P6 dtype widening before injection (PIPE:3158-3173): cast every
-    column to string; dates format as yyyy-MM-dd (Spark's date->string)."""
-    return df.select(*[F.col(c).cast("string").alias(c) for c in df.columns])
+    column that is not a string to string; dates format as yyyy-MM-dd
+    (Spark's date->string). An all-string frame comes back as itself."""
+    casts = {
+        f.name: F.col(f.name).cast("string")
+        for f in df.schema.fields
+        if not isinstance(f.dataType, StringType)
+    }
+    return df.withColumns(casts) if casts else df
 
 
 def blank_columns(df: DataFrame, columns: list[str]) -> DataFrame:

@@ -17,8 +17,9 @@ set, so it is in none of the four frames, but its rows still count.
 
 ``reconcile_errors`` runs no Spark action. The counts and the verdict
 come from one aggregate over the full-outer join, run the first time
-any of them is read; the four frames stay lazy for callers that look
-at rows.
+any of them is read. The four frames are built from the join the first
+time each is read: every ``filter``/``select`` re-analyzes a plan that
+holds the whole rule catalog, and the scenario reads only the counts.
 """
 
 from __future__ import annotations
@@ -52,14 +53,41 @@ def error_tokens(df: DataFrame, payee_col: str, desc_col: str) -> DataFrame:
     )
 
 
+# CSV ⊆ DB passes (PIPE:953-956): only CSV-side extras are a mismatch.
+_IN_BOTH = "csv_tokens IS NOT NULL AND db_tokens IS NOT NULL"
+_EXTRAS = "array_except(csv_tokens, db_tokens)"
+_IS_MISMATCHED = f"{_IN_BOTH} AND size({_EXTRAS}) > 0"
+_IS_MISSING_IN_DB = "csv_tokens IS NOT NULL AND db_tokens IS NULL"
+
+
 @dataclass
 class ReconcileResult:
-    matched: DataFrame
-    mismatched: DataFrame
-    missing_in_db: DataFrame
-    missing_in_csv: DataFrame
+    #: payee_id, csv_tokens, db_tokens, csv_rows, db_rows per payee.
+    joined: DataFrame
     #: One row: csv_count, db_count, mismatched, missing_in_db.
     totals: DataFrame
+
+    @cached_property
+    def matched(self) -> DataFrame:
+        return self.joined.filter(f"{_IN_BOTH} AND size({_EXTRAS}) = 0") \
+            .select("payee_id", "csv_tokens", "db_tokens")
+
+    @cached_property
+    def mismatched(self) -> DataFrame:
+        return self.joined.filter(_IS_MISMATCHED).select(
+            "payee_id", "csv_tokens", "db_tokens",
+            F.expr(_EXTRAS).alias("csv_only_tokens"))
+
+    @cached_property
+    def missing_in_db(self) -> DataFrame:
+        return self.joined.filter(_IS_MISSING_IN_DB).select(
+            "payee_id", "csv_tokens")
+
+    @cached_property
+    def missing_in_csv(self) -> DataFrame:
+        return self.joined.filter(
+            "db_tokens IS NOT NULL AND csv_tokens IS NULL").select(
+            "payee_id", "db_tokens")
 
     @cached_property
     def _counts(self) -> Row:
@@ -112,27 +140,12 @@ def reconcile_errors(
         F.col("c.rows").alias("csv_rows"),
         F.col("d.rows").alias("db_rows"),
     )
-    in_csv = F.col("csv_tokens").isNotNull()
-    in_db = F.col("db_tokens").isNotNull()
-    # CSV ⊆ DB passes (PIPE:953-956): only CSV-side extras are a mismatch.
-    extras = F.array_except("csv_tokens", "db_tokens")
-    is_missing_in_db = in_csv & ~in_db
-    is_mismatched = in_csv & in_db & (F.size(extras) > 0)
-
     return ReconcileResult(
-        matched=joined.filter(in_csv & in_db & (F.size(extras) == 0))
-        .select("payee_id", "csv_tokens", "db_tokens"),
-        mismatched=joined.filter(is_mismatched)
-        .select("payee_id", "csv_tokens", "db_tokens",
-                extras.alias("csv_only_tokens")),
-        missing_in_db=joined.filter(is_missing_in_db)
-        .select("payee_id", "csv_tokens"),
-        missing_in_csv=joined.filter(in_db & ~in_csv)
-        .select("payee_id", "db_tokens"),
+        joined=joined,
         totals=joined.agg(
             F.coalesce(F.sum("csv_rows"), F.lit(0)).alias("csv_count"),
             F.coalesce(F.sum("db_rows"), F.lit(0)).alias("db_count"),
-            F.count_if(is_mismatched).alias("mismatched"),
-            F.count_if(is_missing_in_db).alias("missing_in_db"),
+            F.count_if(F.expr(_IS_MISMATCHED)).alias("mismatched"),
+            F.count_if(F.expr(_IS_MISSING_IN_DB)).alias("missing_in_db"),
         ),
     )

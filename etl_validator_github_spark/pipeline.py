@@ -237,7 +237,9 @@ class ScenarioResult:
             return f"FILE REJECTED: {reason}"
         verdict = "MATCH" if self.counts_match else "MISMATCH"
         return (f"CSV errors: {self.csv_error_count}, "
-                f"DB errors: {self.db_error_count}. Row counts {verdict}")
+                f"DB errors: {self.db_error_count}, "
+                f"validate errors: {self.pipeline.error_count}. "
+                f"Row counts {verdict}")
 
 
 def run_scenario(
@@ -259,7 +261,8 @@ def run_scenario(
     exercising the sink + parse round-trip) against the rule engine's
     in-memory error records (the reference's SQL-DB side). Matching
     token sets + counts is what the reference calls "Row counts MATCH"
-    (PIPE:1196-1361).
+    (PIPE:1196-1361); the CSV count must also equal the error count the
+    validate write observed.
 
     ``extension`` names the ready-file suffix; a non-ingestible one (the
     reference's invalid-extension scenario, PIPE:3040-3073) makes
@@ -316,8 +319,12 @@ def run_scenario(
     if res.error_file:
         csv_side = read_error_csv(spark, res.error_file)
         rec = reconcile_errors(csv_side, db_side)
+        # The rows read back must also be the rows the validate write
+        # observed: a sink that loses or splits a row fails loudly here,
+        # even when the CSV and DB sides happen to agree.
+        counts_match = rec.counts_match and rec.csv_count == res.error_count
         return ScenarioResult(res, rec.csv_count, rec.db_count,
-                              rec.counts_match, rec.passed)
+                              counts_match, rec.passed)
     # No error file: pass iff the DB side is empty too (PIPE:1284-1290).
     db_count = db_side.count()
     return ScenarioResult(res, 0, db_count, db_count == 0, db_count == 0)

@@ -9,7 +9,9 @@ Hadoop FS layer handles s3a:// URIs natively at deploy time.
 
 from __future__ import annotations
 
+import csv
 import glob
+import json
 import os
 import shutil
 from collections.abc import Callable, Iterator
@@ -17,8 +19,15 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
+from etl_validator_github_spark.operators.errors import ERROR_FILE_COLUMNS
 from etl_validator_github_spark.schema import bankdata_schema
+
+
+#: Footer key under which Spark records a parquet file's schema as JSON
+#: (``ParquetReadSupport.SPARK_METADATA_KEY``).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def read_bankdata(spark: SparkSession, path: str) -> DataFrame:
@@ -27,10 +36,21 @@ def read_bankdata(spark: SparkSession, path: str) -> DataFrame:
     The canonical schema is enforced for flat formats so blank dates and
     string columns survive exactly; extra/missing columns intentionally
     still surface (schema validation runs on df.columns, R24).
+
+    A parquet file that Spark wrote carries its schema as JSON in the
+    footer. That schema is read on the driver (pyarrow, about a
+    millisecond) and passed to the reader, so the read starts no Spark
+    job; without it, Spark runs a schema-merge job to open the same
+    footer. Spark's own inference prefers that key too, so the result
+    is the same schema. A file without the key (written by pandas or
+    pyarrow, like the reference generator's output), or a path the
+    driver cannot open, is still inferred by Spark.
     """
     lower = path.lower()
     if lower.endswith(".parquet"):
-        return spark.read.parquet(path)
+        schema = _spark_parquet_schema(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
     if lower.endswith(".csv"):
         return spark.read.option("header", True).csv(path)
     if lower.endswith(".json"):
@@ -103,15 +123,41 @@ def read_pipe_csv(spark: SparkSession, path: str) -> DataFrame:
 
 def read_error_csv(spark: SparkSession, path: str) -> DataFrame:
     """S7 specialized: error file with case-insensitive column mapping
-    (PIPE:841-852 lower-cases header names before lookup)."""
-    df = read_pipe_csv(spark, path)
-    mapping = {c.lower(): c for c in df.columns}
-    out = df
-    for want in ("FILENAME", "PayeeId", "ERROR_DESC"):
-        have = mapping.get(want.lower())
-        if have and have != want:
-            out = out.withColumnRenamed(have, want)
-    return out
+    (PIPE:841-852 lower-cases header names before lookup).
+
+    The header line is read on the driver: from the file itself, or from
+    the first ``part-*.csv`` of a directory sink. Header names that match
+    ``FILENAME``, ``PayeeId`` or ``ERROR_DESC`` case-insensitively take
+    that spelling, and the file is read with that all-STRING schema, so
+    the read starts no Spark job (header inference cost two SQL
+    executions). Raises ``ValueError`` naming the missing columns when
+    the header lacks any of the three, or when there is no header line.
+    """
+    header = _pipe_csv_header(path)
+    wanted = {w.lower(): w for w in ERROR_FILE_COLUMNS}
+    names = [wanted.get(h.lower(), h) for h in header]
+    missing = [w for w in ERROR_FILE_COLUMNS if w not in names]
+    if missing:
+        raise ValueError(f"error file {path} lacks columns {missing} "
+                         f"(header: {header})")
+    schema = StructType([StructField(n, StringType()) for n in names])
+    return spark.read.schema(schema).option("header", True).option(
+        "sep", "|").csv(path)
+
+
+def _pipe_csv_header(path: str) -> list[str]:
+    """The first line of a pipe-CSV file, or of the first part file of a
+    sink directory (partition subdirectories included), as column names
+    (an empty name becomes Spark's ``_c<i>``); [] for an empty file."""
+    if os.path.isdir(path):
+        parts = sorted(glob.glob(os.path.join(path, "**", "part-*.csv"),
+                                 recursive=True))
+        if not parts:
+            raise FileNotFoundError(f"no part-*.csv files under {path}")
+        path = parts[0]
+    with open(path, newline="", encoding="utf-8-sig") as f:
+        header = next(csv.reader(f, delimiter="|"), [])
+    return [h or f"_c{i}" for i, h in enumerate(header)]
 
 
 def raw_data_row_count(spark: SparkSession, path: str) -> int:
@@ -139,18 +185,44 @@ def parquet_metadata_row_count(path: str) -> int:
     """
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(root, f)
-            for root, _, names in os.walk(path)
-            for f in names
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    else:
-        files = [path]
+    files = _parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The data files of a parquet path: the path itself, or the sorted
+    ``*.parquet`` files under a directory (recursive), skipping the
+    ``_``/``.`` names Spark and Hadoop leave beside them."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(root, f)
+        for root, _, names in os.walk(path)
+        for f in names
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _spark_parquet_schema(path: str) -> StructType | None:
+    """The schema Spark recorded in the footer of the path's first data
+    file, or None when there is no such file or key. A footer pyarrow
+    cannot parse is left to Spark too, which fails or skips the file
+    under its own settings."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = [f for f in _parquet_files(path) if os.path.isfile(f)]
+    if not files:
+        return None
+    try:
+        meta = pq.read_schema(files[0]).metadata or {}
+    except pa.ArrowInvalid:
+        return None
+    if _SPARK_SCHEMA_KEY not in meta:
+        return None
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
 
 
 def write_single_csv(

@@ -8,6 +8,7 @@ the precise error list for each.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -116,3 +117,20 @@ def sql_executions(spark: SparkSession) -> Iterator[list[str]]:
     started: list[str] = []
     yield started
     started.extend(d for i, d in newest() if i > start)
+
+
+@contextmanager
+def spark_jobs(spark: SparkSession) -> Iterator[list[int]]:
+    """Yield a list that, when the block exits, holds the id of every
+    Spark job the block started (read after draining the listener bus)."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    started: list[int] = []
+    try:
+        yield started
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    started.extend(sc.statusTracker().getJobIdsForGroup(group))

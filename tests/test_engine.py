@@ -1,6 +1,7 @@
 """Engine-level tests: generator validity, mutation ops, reconciliation,
 error sink, schema validation, end-to-end pipeline."""
 
+import datetime
 import os
 
 from pyspark.sql import functions as F
@@ -23,7 +24,7 @@ from etl_validator_github_spark.operators.validate import (
 )
 from etl_validator_github_spark.pipeline import validate_file
 from etl_validator_github_spark.schema import COLUMNS, R_KEEP_FIELDS
-from tests.helpers import VALID_D_CHK, VALID_M_EFT, make_df
+from tests.helpers import VALID_D_CHK, VALID_M_EFT, VALID_R, make_df
 
 
 def test_generated_data_is_rule_valid(spark):
@@ -193,6 +194,47 @@ def test_pipeline_end_to_end(spark, tmp_path):
     assert header == "FILENAME|PayeeId|ERROR_DESC"
     assert res.archived_to and os.path.exists(res.archived_to)
     assert not os.path.exists(input_path)
+
+
+#: Values injected into every column of each valid base row for the
+#: error-file pin: NULL, blank, whitespace only, and values that break
+#: enum, length, charset, date and pairing rules.
+PIN_VALUES = (None, "", "   ", "Z", "1", "$!", "12AB3", "A" * 120,
+              "2026-13-45", "2025-01-01", "PMT", "CHK", "0123456789")
+
+#: md5 of the error CSV ``validate_file`` writes for the pin input.
+ERROR_FILE_MD5 = "68bd6a96dc08008d134233e16a1c0965"
+
+
+def test_error_file_bytes_are_pinned(spark, tmp_path):
+    """The error CSV for a fixed input is byte-identical across changes
+    to the rule compiler, the sink and the readers. The input breaks
+    every rule: each column of a valid M, D and R row takes every pin
+    value, and R rows carry exactly one non-blank R field each, after a
+    fixed-seed generated file."""
+    import hashlib
+
+    from etl_validator_github_spark.operators.rules import bankdata_rules
+    from etl_validator_github_spark.schema import R_BLANK_FIELDS
+
+    crafted = [
+        {**base, c: v}
+        for base in (VALID_M_EFT, VALID_D_CHK, VALID_R)
+        for c in COLUMNS
+        for v in PIN_VALUES
+    ] + [{**VALID_R, f: VALID_M_EFT[f] or "x"} for f in R_BLANK_FIELDS]
+    df = make_df(spark, crafted).unionByName(
+        generate_bankdata(spark, 40, seed=813))
+    path = str(tmp_path / "ready" / "mtfdm_dev2_dmbankdata_pin.parquet")
+    df.coalesce(1).write.parquet(path)
+    res = validate_file(spark, path, error_dir=str(tmp_path / "error"),
+                        now=datetime.datetime(2026, 3, 10, 14, 28, 32))
+    with open(res.error_file, "rb") as f:
+        data = f.read()
+    body = data.decode()
+    missing = [r.message for r in bankdata_rules() if r.message not in body]
+    assert not missing, f"pin input breaks no row for {missing}"
+    assert hashlib.md5(data).hexdigest() == ERROR_FILE_MD5, res.error_count
 
 
 def test_pipeline_rejects_bad_extension(spark, tmp_path):

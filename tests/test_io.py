@@ -8,11 +8,14 @@ error reads are the S7/S8 operators.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_validator_github_spark.generator import generate_bankdata
 from etl_validator_github_spark.sources import io as sio
+from tests.helpers import spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -102,6 +105,86 @@ def test_read_error_csv_pipe_delimited(spark, tmp_path):
     row = df.collect()[0]
     assert row["PayeeId"] == "MFR003"
     assert "9 digits" in row["ERROR_DESC"]
+
+
+def test_read_error_csv_maps_header_case_and_quotes(spark, tmp_path):
+    p = tmp_path / "err3.csv"
+    p.write_text('"filename"|payeeid|"Error_Desc"|extra\n'
+                 'f.parquet|MFR003|"a, b"|x\n')
+    df = sio.read_error_csv(spark, str(p))
+    assert df.columns == ["FILENAME", "PayeeId", "ERROR_DESC", "extra"]
+    assert [tuple(r) for r in df.collect()] == [("f.parquet", "MFR003",
+                                                 "a, b", "x")]
+
+
+def test_read_error_csv_reads_a_directory_sink(spark, tmp_path):
+    from etl_validator_github_spark.operators.errors import write_error_csv
+
+    records = spark.createDataFrame(
+        [("f.parquet", f"P{i}", "bad") for i in range(6)],
+        "FILENAME string, PayeeId string, ERROR_DESC string",
+    ).repartition(3)
+    path = str(tmp_path / "errs")
+    write_error_csv(records, path, single_file=False)
+    df = sio.read_error_csv(spark, path)
+    assert sorted(r["PayeeId"] for r in df.collect()) == [
+        f"P{i}" for i in range(6)]
+
+
+@pytest.mark.parametrize("header, missing", [
+    ("FILENAME|PayeeId", ["ERROR_DESC"]),
+    ("PayeeId|ERROR_DESC", ["FILENAME"]),
+    ("FILENAME|Payee|ERROR_DESC", ["PayeeId"]),
+    ("", ["FILENAME", "PayeeId", "ERROR_DESC"]),
+])
+def test_read_error_csv_raises_on_missing_columns(spark, tmp_path, header,
+                                                  missing):
+    p = tmp_path / "bad.csv"
+    p.write_text(header + "\n" if header else "")
+    with pytest.raises(ValueError, match=re.escape(str(missing))):
+        sio.read_error_csv(spark, str(p))
+
+
+def _parquet_input(spark, tmp_path, kind):
+    path = str(tmp_path / f"{kind}.parquet")
+    if kind == "pyarrow_file":
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        pq.write_table(pa.table({"PayeeID": ["P1", None], "n": [1, 2]}),
+                       path)
+        return path
+    df = generate_bankdata(spark, 20, seed=246,
+                           dates_as_strings=kind != "dates")
+    (df.repartition(5) if kind == "five_parts" else df).write.parquet(path)
+    return path
+
+
+@pytest.mark.parametrize(
+    "kind", ["strings", "dates", "five_parts", "pyarrow_file"])
+def test_read_bankdata_schema_equals_inference(spark, tmp_path, kind):
+    """The footer schema is the one Spark infers: all-string and DATE
+    columns, single- and multi-part directories. A pyarrow-written file
+    has no Spark schema key and is still inferred (its read starts the
+    schema job)."""
+    path = _parquet_input(spark, tmp_path, kind)
+    with spark_jobs(spark) as ids:
+        df = sio.read_bankdata(spark, path)
+    assert df.schema == spark.read.parquet(path).schema
+    assert bool(ids) == (kind == "pyarrow_file"), ids
+
+
+def test_readers_start_no_job(spark, tmp_path):
+    path = _parquet_input(spark, tmp_path, "strings")
+    err = tmp_path / "err.csv"
+    err.write_text("FILENAME|PayeeId|ERROR_DESC\nf|P1|bad\n")
+    with spark_jobs(spark) as ids:
+        sio.read_bankdata(spark, path)
+        sio.read_error_csv(spark, str(err))
+    assert ids == []
+    with spark_jobs(spark) as ids:
+        spark.read.parquet(path)
+    assert ids, "an inferred read started no job: the counter is blind"
 
 
 def test_archive_path_layout():

@@ -4,9 +4,9 @@ SQL status store, and the error sink's staging discipline.
 Each stage runs one action: ``validate_file`` writes its error records
 once, with row counts observed in the same pass, and the observed count
 decides whether the file is committed; reconciliation runs one
-aggregate. A scenario with injected errors therefore runs five SQL
-executions: the ready-file write, the validate write, the two the CSV
-reader spends on the error file's header, and the reconcile aggregate.
+aggregate. The error file's header is read on the driver, so a
+scenario with injected errors runs three SQL executions: the ready-file
+write, the validate write and the reconcile aggregate.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from etl_validator_github_spark.generator import generate_bankdata
 from etl_validator_github_spark.operators import mutate
 from etl_validator_github_spark.pipeline import run_scenario, validate_file
+from etl_validator_github_spark.sources import io as sio
 from etl_validator_github_spark.sources.io import write_single_csv
 from tests.helpers import sql_executions
 
@@ -49,18 +50,49 @@ def test_validate_error_path_runs_one_sql_execution(spark, tmp_path):
         assert len(f.read().splitlines()) == 2  # header + one record
 
 
-def test_scenario_with_errors_runs_five_sql_executions(spark, tmp_path):
+def _scenario_with_errors(spark, tmp_path):
+    return run_scenario(
+        spark, str(tmp_path), rows=20, seed=246,
+        invalid_values={"RoutingTransitNumber": "BAD"},
+        invalid_cells={("State", 1): "X"},
+    )
+
+
+def test_scenario_with_errors_runs_three_sql_executions(spark, tmp_path):
     with sql_executions(spark) as started:
-        res = run_scenario(
-            spark, str(tmp_path), rows=20, seed=246,
-            invalid_values={"RoutingTransitNumber": "BAD"},
-            invalid_cells={("State", 1): "X"},
-        )
+        res = _scenario_with_errors(spark, tmp_path)
     assert res.reconcile_passed and res.counts_match
     assert res.csv_error_count == res.pipeline.error_count == 20
-    assert len(started) == 5, started
-    assert started[1].startswith("validate: ")
-    assert started[-1] == "reconcile"
+    assert len(started) == 3, started
+    assert started[1] == f"validate: {os.path.basename(res.pipeline.input_path)}"
+    assert started[2] == "reconcile"
+
+
+def test_lossy_sink_fails_the_row_count_check(spark, tmp_path, monkeypatch):
+    """A row lost between the validate write and the read-back fails the
+    scenario, and the summary names all three counts."""
+    read = sio.read_error_csv
+    monkeypatch.setattr(
+        sio, "read_error_csv",
+        lambda spark, path: read(spark, path).orderBy("PayeeId").offset(1))
+    res = _scenario_with_errors(spark, tmp_path)
+    assert not res.counts_match
+    assert res.summary() == (
+        "CSV errors: 19, DB errors: 20, validate errors: 20. "
+        "Row counts MISMATCH")
+
+
+def test_widen_to_strings_casts_only_non_strings(spark):
+    strings = generate_bankdata(spark, 3, seed=246)
+    assert mutate.widen_to_strings(strings) is strings
+    dated = generate_bankdata(spark, 3, seed=246, dates_as_strings=False)
+    assert dict(dated.dtypes)["EffectiveStartDate"] == "date"
+    widened = mutate.widen_to_strings(dated)
+    assert widened.columns == dated.columns
+    assert {t for _, t in widened.dtypes} == {"string"}
+    got = widened.select("EffectiveStartDate").collect()
+    want = dated.select("EffectiveStartDate").collect()
+    assert [r[0] for r in got] == [r[0].strftime("%Y-%m-%d") for r in want]
 
 
 @pytest.mark.parametrize("single_file", [True, False])

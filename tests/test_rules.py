@@ -294,3 +294,44 @@ def test_skyline_matches_brute_force_dominance(spark):
         )
     want = sorted(k for k in pts if not dominated(k))
     assert got == want
+
+
+def test_flat_all_blank_equals_and_of_is_blank(spark):
+    """``_all_blank``'s one-comparison form equals the AND of
+    ``is_blank`` over the R fields, for each field taking NULL, '',
+    whitespace only or a value while the other fields are blank."""
+    from pyspark.sql import functions as F
+
+    from etl_validator_github_spark.functions.core import is_blank
+    from etl_validator_github_spark.schema import R_BLANK_FIELDS
+
+    fields = list(R_BLANK_FIELDS)
+    values = [None, "", "   ", " x "]
+    rows = [
+        tuple(v if f == g else "" for g in fields)
+        for f in fields for v in values
+    ] + [(None,) * len(fields), ("  ",) * len(fields)]
+    df = spark.createDataFrame(rows, ", ".join(f"{f} string" for f in fields))
+    anded = F.lit(True)
+    for f in fields:
+        anded = anded & is_blank(f)
+    got = df.select(R._all_blank(R_BLANK_FIELDS).alias("flat"),
+                    anded.alias("anded")).collect()
+    assert [(r.flat, r.anded) for r in got] == [
+        (not any(v == " x " for v in row),) * 2 for row in rows]
+
+
+def test_rule_projection_optimizes_near_its_fixpoint(spark):
+    """Catalyst optimizes the catalog projection in few rule runs. A
+    predicate the optimizer rewrites one level per fixpoint iteration
+    (a NOT over a left-deep AND) made the operator-optimization batch
+    re-run every rule over the whole tree ~17 times (1,535 rule runs)."""
+    from etl_validator_github_spark.generator import generate_bankdata
+    from etl_validator_github_spark.operators.validate import failing_records
+
+    executor = spark._jvm.org.apache.spark.sql.catalyst.rules.RuleExecutor  # noqa: SLF001
+    df = failing_records(generate_bankdata(spark, 10, seed=246))
+    executor.resetMetrics()
+    df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    runs = executor.getCurrentMetrics().numRuns()
+    assert runs <= 1000, f"{runs} rule runs:\n{executor.dumpTimeSpent()}"

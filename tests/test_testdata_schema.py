@@ -24,8 +24,6 @@ from __future__ import annotations
 
 import glob
 import os
-import uuid
-from contextlib import contextmanager
 from itertools import zip_longest
 
 import pandas as pd
@@ -33,6 +31,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from etl_validator_github_spark.contract import SCHEMAS, load
+from tests.helpers import spark_jobs
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 #: Every scale factor next to SF_DIR (sf0.001, sf0.01, sf0.1, ...).
@@ -174,23 +173,6 @@ def test_declared_schemas_match_inferred(spark):
     )
 
 
-@contextmanager
-def _job_ids(spark):
-    """Yield a list that, when the block exits, holds the id of every
-    Spark job the block started (read after draining the listener bus)."""
-    sc = spark.sparkContext
-    group = f"schema-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "contract.load job count")
-    started: list[int] = []
-    try:
-        yield started
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    started.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata absent")
 def test_declared_tables_load_without_a_job(spark):
     """Loading a declared table lists its file and starts no Spark job;
@@ -198,12 +180,12 @@ def test_declared_tables_load_without_a_job(spark):
     sees inference jobs at all)."""
     started = {}
     for table in SCHEMAS:
-        with _job_ids(spark) as ids:
+        with spark_jobs(spark) as ids:
             load(spark, SF_DIR, table)
         if ids:
             started[table] = ids
     assert not started, f"declared loads started jobs: {started}"
-    with _job_ids(spark) as ids:
+    with spark_jobs(spark) as ids:
         spark.read.parquet(f"{SF_DIR}/region.parquet")
     assert ids, "an inferred read started no job: the counter is blind"
 
