@@ -205,7 +205,10 @@ def main() -> int:
         "sf": sf_val,
         "load_avg_1m": {"start": round(load_start, 2),
                         "end": round(os.getloadavg()[0], 2)},
-        "n_cpus": len(os.sched_getaffinity(0)),
+        # The parallelism the queries ran at (SPARK_GRAFT_CPUS), and
+        # the cores the process may use.
+        "n_cpus": spark.sparkContext.defaultParallelism,
+        "host_cpus": len(os.sched_getaffinity(0)),
         "query_detail": detail,
         "stable_value": round(
             sum(d["sec_stable"] for d in detail.values()), 3

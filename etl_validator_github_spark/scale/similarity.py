@@ -501,9 +501,10 @@ FROM with_norm v JOIN cells c USING (label)
 # broadcast of K tiny centroids against the corpus (ONE map pass — the
 # centroid table folds into a single broadcast array row and every
 # vector scores all cells in-row via transform + array_sort + slice, so
-# no exchange ever touches the corpus × n_cells expansion), and
-# candidate generation broadcasts the probes — the only shuffle in the
-# whole query is the final per-query top-k over the candidate rows.
+# no exchange ever touches the corpus × n_cells expansion). The probe
+# co-partitions members and (query, cell) probe rows on the cell id and
+# scores each cell with one blockwise gram, so the only other shuffle
+# is the final per-query top-k over the per-cell top-k rows.
 # ---------------------------------------------------------------------------
 
 N_PROBE = 2
@@ -656,22 +657,22 @@ def ivf_assignments(embeddings: DataFrame,
     )
 
 
-def _probe_topk_np(assign: DataFrame, probes: DataFrame,
-                   k: int) -> DataFrame:
-    """dgemm twin of the IVF probe join (the family's standing scale
-    opt-in): per probed cell, a blockwise gram between the probing
-    queries and the cell's members (member axis streamed through
-    fixed-size blocks with a running top-k — see the kernel comment),
-    keeping each query's per-cell top-k (the
-    global top-k is a subset of the per-cell top-k union because cells
-    partition the candidates); the tiny union then ranks through the
-    same final window. Dots are exact in float64 (quantized micros)
-    and the cos arithmetic is the same IEEE ops as the join expression
-    — equality pinned in tests/test_similarity_np.py. Zero-norm rows
-    (all components quantize to 0) have no defined cosine: both probe
-    paths drop them up front (the expression path would rank its NULL
-    cosines, the numpy path its NaNs — differently), keeping the two
-    formulations bit-identical."""
+def _probe_topk(assign: DataFrame, probes: DataFrame,
+                k: int) -> DataFrame:
+    """The IVF probe + per-query top-k shared by every serve path
+    (``ivf_topk``, ``ivf_topk_from_assignment``, ``ivf_topk_for_queries``,
+    ``external_topk``): per probed cell, a blockwise gram between the
+    probing queries and the cell's members (member axis streamed
+    through fixed-size blocks with a running top-k — see the kernel
+    comment), keeping each query's per-cell top-k (the global top-k is
+    a subset of the per-cell top-k union because cells partition the
+    candidates); the tiny union then ranks through one window with the
+    deterministic (cos desc, id asc) tie-break. Dots are exact in
+    float64 (quantized micros) and the cos arithmetic is the same IEEE
+    ops as an exact-cosine join over (query, probed cell) — equality
+    with that join pinned in tests/test_similarity_np.py. Zero-norm
+    rows (all components quantize to 0) have no defined cosine and drop
+    up front, as in the oracle SQL."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import Window
@@ -706,8 +707,8 @@ def _probe_topk_np(assign: DataFrame, probes: DataFrame,
         qid = q["query_id"].to_numpy(dtype=np.int64)
         nq = len(q)
         kk = min(k, len(m))
-        # Running per-query top-k over MEMBER-AXIS blocks (the np_pairs
-        # blockwise-gram discipline): the gram slab is nq × block
+        # Running per-query top-k over MEMBER-AXIS blocks (the
+        # _per_vec_max_cos blockwise gram): the gram slab is nq × block
         # instead of nq × cell_pop, so a frozen index whose cells grow
         # 100× under delta ingest never materializes a pop-wide slab.
         # Top-k under the total order (cos desc, id asc) is associative
@@ -751,42 +752,6 @@ def _probe_topk_np(assign: DataFrame, probes: DataFrame,
     )
 
 
-def _probe_join_topk(assign: DataFrame, probes: DataFrame,
-                     k: int) -> DataFrame:
-    """The IVF probe join + per-query top-k shared by the in-memory
-    path (``ivf_topk``) and the persisted-index path
-    (``ivf_topk_from_index``): broadcast the (query, probed-cell) rows
-    onto the cell-keyed assignment, score exact cosine within probed
-    cells, rank with the deterministic (cos desc, id asc) tie-break.
-    Zero-norm rows drop up front (see ``_probe_topk_np`` — keeps the
-    two probe formulations bit-identical)."""
-    from pyspark.sql import Window
-
-    assign = assign.filter(F.col("norm2") > 0)
-    probes = probes.filter(F.col("q_norm2") > 0)
-    cand_cos = (
-        F.expr(_DOT.format(a="q_qv", b="qv"))
-        / (F.sqrt("q_norm2") * F.sqrt("norm2"))
-    )
-    cands = (
-        F.broadcast(probes).join(assign, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cand_cos.alias("cos_sim"),
-        )
-    )
-    w_topk = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w_topk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
-
-
 def ivf_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
              k: int = TOP_K, nprobe: int = N_PROBE) -> DataFrame:
     """Approximate top-k neighbors via IVF cell probing."""
@@ -808,7 +773,7 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
         F.col("qv").alias("q_qv"),
         F.col("norm2").alias("q_norm2"),
     )
-    return _probe_join_topk(assign, probes, k)
+    return _probe_topk(assign, probes, k)
 
 
 # ---------------------------------------------------------------------------
@@ -827,8 +792,9 @@ def home_cell_assignment(vectors: DataFrame, cells: DataFrame,
                          np_assign: bool = False) -> DataFrame:
     """(vec_id, cell, qv, norm2) — each vector's single home cell, the
     one assignment row shape every index store writes and every serve
-    path reads (persist / delta append / streaming maintenance / the
-    in-memory ivf_topk). ``vectors`` is the output of ``quantized``."""
+    path reads (persist / delta append / streaming maintenance /
+    external_topk / the SemDeDup family). ``vectors`` is the output of
+    ``quantized``."""
     assign = cell_assignments_np if np_assign else cell_assignments
     return assign(vectors, cells, nprobe=1).select(
         "vec_id",
@@ -894,8 +860,7 @@ def append_ivf_index(delta: DataFrame, index_dir: str,
 def ivf_topk_from_assignment(assign_t: DataFrame, cells: DataFrame,
                              n_queries: int = N_QUERIES, k: int = TOP_K,
                              nprobe: int = N_PROBE,
-                             np_assign: bool = False,
-                             np_probe: bool = False) -> DataFrame:
+                             np_assign: bool = False) -> DataFrame:
     """Top-k for the standing query batch over an already-materialized
     (vec_id, cell, qv, norm2) assignment frame: only the QUERY vectors
     are (re)assigned at query time (against the tiny broadcast centroid
@@ -906,8 +871,7 @@ def ivf_topk_from_assignment(assign_t: DataFrame, cells: DataFrame,
         "vec_id", "qv", "norm2"
     )
     probes = _query_probes(qvecs, cells, nprobe, np_assign)
-    topk = _probe_topk_np if np_probe else _probe_join_topk
-    return topk(assign_t, probes, k)
+    return _probe_topk(assign_t, probes, k)
 
 
 def _query_probes(qvecs: DataFrame, cells: DataFrame, nprobe: int,
@@ -990,8 +954,7 @@ def read_ivf_index_assignment(spark: SparkSession,
 def ivf_topk_from_index(spark: SparkSession, index_dir: str,
                         n_queries: int = N_QUERIES, k: int = TOP_K,
                         nprobe: int = N_PROBE,
-                        np_assign: bool = False,
-                        np_probe: bool = False) -> DataFrame:
+                        np_assign: bool = False) -> DataFrame:
     """Top-k straight from the persisted index directories — served
     over the unified batch+stream view (``read_ivf_index_assignment``).
     Identical results to the in-memory ``ivf_topk`` when the stores
@@ -1000,15 +963,14 @@ def ivf_topk_from_index(spark: SparkSession, index_dir: str,
         read_ivf_index_assignment(spark, index_dir),
         spark.read.parquet(f"{index_dir}/cells.parquet"),
         n_queries=n_queries, k=k, nprobe=nprobe,
-        np_assign=np_assign, np_probe=np_probe,
+        np_assign=np_assign,
     )
 
 
 def ivf_topk_for_queries(spark: SparkSession, index_dir: str,
                          queries_df: DataFrame, k: int = TOP_K,
                          nprobe: int = N_PROBE,
-                         np_assign: bool = False,
-                         np_probe: bool = False) -> DataFrame:
+                         np_assign: bool = False) -> DataFrame:
     """Top-k neighbors in the persisted index for an ARBITRARY external
     query frame — the real serving contract (``ivf_topk_from_index``
     sources its standing query batch from the index itself, which only
@@ -1026,8 +988,7 @@ def ivf_topk_for_queries(spark: SparkSession, index_dir: str,
     assign_t = read_ivf_index_assignment(spark, index_dir)
     cells = spark.read.parquet(f"{index_dir}/cells.parquet")
     probes = _query_probes(quantized(queries_df), cells, nprobe, np_assign)
-    topk = _probe_topk_np if np_probe else _probe_join_topk
-    return topk(assign_t, probes, k)
+    return _probe_topk(assign_t, probes, k)
 
 
 #: External-query holdout size for the oracled serve query: the md5
@@ -1039,15 +1000,14 @@ EXT_QUERY_HOLDOUT = 100
 
 def external_topk(index_corpus: DataFrame, queries: DataFrame,
                   k: int = TOP_K, nprobe: int = N_PROBE,
-                  np_assign: bool = False,
-                  np_probe: bool = False) -> DataFrame:
+                  np_assign: bool = False) -> DataFrame:
     """In-memory core of the external-query serve contract — exactly
     ``ivf_topk_for_queries`` minus the persisted stores: build the
     coarse quantizer from the labeled ``index_corpus``, assign the
     corpus to home cells, assign the ARBITRARY (vec_id, embedding)
     query frame against the same frozen centroids with the full nprobe
     fan-out, probe, exact-rescore. Shares ``_query_probes`` and the
-    probe kernels with the persisted path, so an oracle gate on this
+    probe kernel with the persisted path, so an oracle gate on this
     function covers the serve math itself (the store plumbing is
     pinned separately in tests/test_scale.py)."""
     cells = ivf_cells(index_corpus)
@@ -1055,8 +1015,7 @@ def external_topk(index_corpus: DataFrame, queries: DataFrame,
         quantized(index_corpus), cells, np_assign
     )
     probes = _query_probes(quantized(queries), cells, nprobe, np_assign)
-    topk = _probe_topk_np if np_probe else _probe_join_topk
-    return topk(assign_t, probes, k)
+    return _probe_topk(assign_t, probes, k)
 
 
 def _external_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1189,7 +1148,7 @@ QUALIFY rank <= {TOP_K}
 # The family of dedup the shingle/MinHash pipelines can't express —
 # paraphrases with disjoint token sets but near-identical embeddings.
 # At 100 TB: assignment is the map-side broadcast pass above; the pair
-# join shuffles on the cell id, and K (n_cells) is chosen ∝ corpus size
+# pass shuffles on the cell id, and K (n_cells) is chosen ∝ corpus size
 # so per-cell populations stay bounded — the within-cell quadratic is
 # the SemDeDup design cost, bounded by K, never corpus-global.
 # ---------------------------------------------------------------------------
@@ -1216,21 +1175,46 @@ def _pairable_cells(assigned: DataFrame,
     )
 
 
-def _per_vec_max_cos_np(pairable: DataFrame) -> DataFrame:
+def _pairable_assignment(corpus: DataFrame, centroid_source: DataFrame,
+                         max_cell_pop: int,
+                         np_assign: bool) -> tuple[DataFrame, DataFrame]:
+    """(assigned, pairable) — the prefix the SemDeDup family shares:
+    each ``corpus`` vector's home cell (vec_id, cell, qv, norm2) against
+    IVF cells built from ``centroid_source``, and the subset in cells
+    whose population permits pairwise comparison.
+
+    The assignment sits behind a lazy ``localCheckpoint`` barrier (the
+    ``ivf_topk`` idiom): it feeds the pairable-cell census, the pair
+    pass and the caller's output, and without the barrier Catalyst
+    plans the quantize → centroid build → all-cell scoring pipeline
+    once per consumer. Building the barrier runs the exchanges below it
+    (the centroid build) as Spark jobs at build time, as ``ivf_topk``'s
+    barrier does. ``np_assign`` routes the assignment through the dgemm
+    kernel (``cell_assignments_np`` — values identical)."""
+    assigned = home_cell_assignment(
+        quantized(corpus), ivf_cells(centroid_source), np_assign
+    ).localCheckpoint(eager=False)
+    pairable = assigned.join(
+        F.broadcast(_pairable_cells(assigned, max_cell_pop)), "cell"
+    )
+    return assigned, pairable
+
+
+def _per_vec_max_cos(pairable: DataFrame) -> DataFrame:
     """Per vector: max cosine against any LOWER-id vector in the same
-    cell — the dgemm twin of the within-cell pair join (the other half
-    of the family's scale bend: at 1M vectors the pair pass is ~500M
-    interpreted 64-dim lambda folds). One blockwise gram per cell via
-    applyInPandas; dots are exact in float64 (quantized micros, see
-    cell_assignments_np) and the cos arithmetic is the same IEEE ops
-    as the join expression, so the per-vector max is over an identical
-    value set. Emits exactly the join formulation's output set: every
-    vector with at least one lower-id cellmate. Block size bounds the
-    gram slab at ~cell_pop × 1024 doubles (≤80 MB at the 10k pop cap).
-    Zero-norm vectors drop up front (the ``_probe_topk_np``
-    discipline): their cosine is undefined and the engines disagree on
-    0/0 (Spark NULL vs numpy NaN vs DuckDB NaN-sorts-greatest), so
-    excluding them keeps all three formulations identical."""
+    cell — the SemDeDup pair pass. A join over within-cell pairs would
+    evaluate one interpreted 64-dim lambda fold per pair (~500M at 1M
+    vectors); here it is one blockwise gram per cell via applyInPandas.
+    Dots are exact in float64 (quantized micros, see
+    cell_assignments_np) and the cos arithmetic is the same IEEE ops as
+    the pair join's expression, so the per-vector max is over an
+    identical value set (pinned against that join in
+    tests/test_similarity_np.py). Emits every vector with at least one
+    lower-id cellmate. Block size bounds the gram slab at ~cell_pop ×
+    1024 doubles (≤80 MB at the 10k pop cap). Zero-norm vectors drop up
+    front (as in ``_probe_topk``): their cosine is undefined and the
+    engines disagree on 0/0 (Spark NULL vs numpy NaN vs DuckDB
+    NaN-sorts-greatest), so the oracle SQL excludes them too."""
     import numpy as np
     import pandas as pd
 
@@ -1265,9 +1249,7 @@ def _per_vec_max_cos_np(pairable: DataFrame) -> DataFrame:
 def semantic_dedup_keep(corpus: DataFrame, centroid_source: DataFrame,
                         threshold: float = NEAR_DUP_COS,
                         max_cell_pop: int = MAX_CELL_PAIR_POP,
-                        np_assign: bool = False,
-                        materialize_assignment: bool = False,
-                        np_pairs: bool = False) -> DataFrame:
+                        np_assign: bool = False) -> DataFrame:
     """(vec_id, cell, keep) for every corpus vector.
 
     ``centroid_source`` supplies the labeled vectors the IVF cells are
@@ -1276,55 +1258,19 @@ def semantic_dedup_keep(corpus: DataFrame, centroid_source: DataFrame,
     against centroids trained on the base corpus. Cells above
     ``max_cell_pop`` are excluded from pairing (their vectors all keep).
 
-    Plan note: the assignment subtree is referenced three times (pair
-    left side, pair right side, keep-list output) and Spark does not
-    reuse common subplans, so the corpus takes three MAP passes — no
-    extra shuffles. A production caller at 100 TB persists (or writes
-    out) the assignment first; here the gated fixture run stays
-    materialization-free by design. The same scale opt-ins as
-    ``semantic_threshold_sweep`` (values identical, defaults keep the
-    oracle-pinned plan): ``np_assign`` = the dgemm assignment twin,
-    ``materialize_assignment`` = checkpoint instead of re-evaluating.
+    Plan note: the assignment has three consumers (pairable census,
+    pair pass, keep-list output) and is evaluated once behind the
+    barrier in ``_pairable_assignment``; the pair pass shuffles on the
+    cell id only.
     """
-    assign = cell_assignments_np if np_assign else cell_assignments
-    assigned = assign(
-        quantized(corpus), ivf_cells(centroid_source), nprobe=1
-    ).select(
-        "vec_id",
-        F.col("top_cells")[0]["label"].alias("cell"),
-        "qv", "norm2",
+    assigned, pairable = _pairable_assignment(
+        corpus, centroid_source, max_cell_pop, np_assign
     )
-    if materialize_assignment:
-        assigned = assigned.localCheckpoint(eager=False)
-    pairable = assigned.join(
-        F.broadcast(_pairable_cells(assigned, max_cell_pop)), "cell"
+    drops = (
+        _per_vec_max_cos(pairable)
+        .filter(F.col("max_cos") >= threshold)
+        .select("vec_id")
     )
-    if np_pairs:
-        drops = (
-            _per_vec_max_cos_np(pairable)
-            .filter(F.col("max_cos") >= threshold)
-            .select("vec_id")
-        )
-    else:
-        # Zero-norm guard (the _probe_join_topk discipline): 0/0 cosine
-        # is NULL in Spark but NaN-sorts-greatest in DuckDB, so exclude
-        # undefined cosines from pairing in both engines.
-        nz = pairable.filter(F.col("norm2") > 0)
-        a, b = nz.alias("a"), nz.alias("b")
-        cos = (
-            F.expr(_DOT.format(a="a.qv", b="b.qv"))
-            / (F.sqrt("a.norm2") * F.sqrt("b.norm2"))
-        )
-        drops = (
-            a.join(
-                b,
-                (F.col("a.cell") == F.col("b.cell"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .filter(cos >= threshold)
-            .select(F.col("b.vec_id").alias("vec_id"))
-            .distinct()
-        )
     return assigned.join(
         drops.withColumn("__drop", F.lit(1)), "vec_id", "left"
     ).select(
@@ -1412,60 +1358,20 @@ def semantic_threshold_sweep(
     centroid_source: DataFrame,
     max_cell_pop: int = MAX_CELL_PAIR_POP,
     np_assign: bool = False,
-    materialize_assignment: bool = False,
-    np_pairs: bool = False,
 ) -> DataFrame:
     """(threshold_milli, n_total, n_dropped, n_kept) per candidate
     cutoff; drop rule identical to ``semantic_dedup_keep`` (the larger
     vec_id of a ≥-threshold within-cell pair drops).
 
-    Scale opt-ins (defaults keep the fixture-scale plan the oracle was
-    pinned against; values are identical either way):
-    ``np_assign`` routes the cell assignment through the dgemm twin
-    (``cell_assignments_np`` — the expression path's interpreted
-    per-cell lambda is the family's measured scale bend);
-    ``materialize_assignment`` checkpoints the assignment once instead
-    of re-evaluating it for each of its four consumers (pair sides,
-    pairable census, total) — at 100 TB you'd persist it explicitly;
-    ``np_pairs`` replaces the within-cell pair join's interpreted
-    per-pair dot fold with the blockwise per-cell gram
-    (``_per_vec_max_cos_np``).
+    Plan note: the assignment (three consumers: pairable census, pair
+    pass, total) is evaluated once behind the barrier in
+    ``_pairable_assignment``; ``np_assign`` routes it through the dgemm
+    kernel (values identical).
     """
-    assign = cell_assignments_np if np_assign else cell_assignments
-    assigned = assign(
-        quantized(corpus), ivf_cells(centroid_source), nprobe=1
-    ).select(
-        "vec_id",
-        F.col("top_cells")[0]["label"].alias("cell"),
-        "qv", "norm2",
+    assigned, pairable = _pairable_assignment(
+        corpus, centroid_source, max_cell_pop, np_assign
     )
-    if materialize_assignment:
-        assigned = assigned.localCheckpoint(eager=False)
-    pairable = assigned.join(
-        F.broadcast(_pairable_cells(assigned, max_cell_pop)), "cell"
-    )
-    if np_pairs:
-        per_vec = _per_vec_max_cos_np(pairable)
-    else:
-        # Zero-norm guard (the _probe_join_topk discipline): 0/0 cosine
-        # is NULL in Spark but NaN-sorts-greatest in DuckDB, so exclude
-        # undefined cosines from pairing in both engines.
-        nz = pairable.filter(F.col("norm2") > 0)
-        a, b = nz.alias("a"), nz.alias("b")
-        cos = (
-            F.expr(_DOT.format(a="a.qv", b="b.qv"))
-            / (F.sqrt("a.norm2") * F.sqrt("b.norm2"))
-        )
-        per_vec = (
-            a.join(
-                b,
-                (F.col("a.cell") == F.col("b.cell"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(F.col("b.vec_id").alias("vec_id"), cos.alias("cos"))
-            .groupBy("vec_id")
-            .agg(F.max("cos").alias("max_cos"))
-        )
+    per_vec = _per_vec_max_cos(pairable)
     total = assigned.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     counters = per_vec.agg(*[
         F.coalesce(
@@ -1584,18 +1490,16 @@ FROM counted c CROSS JOIN tot
 SPLIT_EVAL_MOD = 3
 
 
-def _split_leak_counts_np(pairable: DataFrame,
-                          threshold: float) -> DataFrame:
-    """dgemm twin of the cross-split pair join (the same scale opt-in
-    family as ``_per_vec_max_cos_np``): per cell, one blockwise gram
-    between the eval rows and the train rows, counting train neighbors
-    at cos ≥ threshold per eval vector. Dots are exact in float64
-    (quantized micros) and the cos arithmetic is the same IEEE ops as
-    the join expression, so the ≥-threshold count is over an identical
-    value set — bit-parity pinned in tests/test_similarity_np.py.
-    Zero-norm vectors drop up front (the ``_per_vec_max_cos_np``
-    discipline — keeps the numpy, expression, and DuckDB formulations
-    identical on undefined cosines)."""
+def _split_leak_counts(pairable: DataFrame,
+                       threshold: float) -> DataFrame:
+    """The cross-split pair pass (the ``_per_vec_max_cos`` kernel
+    family): per cell, one blockwise gram between the eval rows and the
+    train rows, counting train neighbors at cos ≥ threshold per eval
+    vector. Dots are exact in float64 (quantized micros) and the cos
+    arithmetic is the same IEEE ops as an eval × train join's
+    expression, so the ≥-threshold count is over an identical value set
+    — parity with that join pinned in tests/test_similarity_np.py.
+    Zero-norm vectors drop up front (as in ``_per_vec_max_cos``)."""
     import numpy as np
     import pandas as pd
 
@@ -1636,50 +1540,16 @@ def _split_leak_counts_np(pairable: DataFrame,
 def semantic_split_leakage(corpus: DataFrame, centroid_source: DataFrame,
                            threshold: float = NEAR_DUP_COS,
                            max_cell_pop: int = MAX_CELL_PAIR_POP,
-                           np_assign: bool = False,
-                           materialize_assignment: bool = False,
-                           np_pairs: bool = False) -> DataFrame:
+                           np_assign: bool = False) -> DataFrame:
     """(vec_id, cell, n_train_dups) for every EVAL vector that has at
     least one train-split near-duplicate (cos ≥ threshold) in its IVF
     cell — the rows an eval-decontamination pass must quarantine.
-
-    Scale opt-ins are the ``semantic_dedup_keep`` trio (values
-    identical, defaults keep the oracle-pinned plan): ``np_assign``
-    dgemm assignment, ``materialize_assignment`` checkpoint,
-    ``np_pairs`` the blockwise cross-split gram."""
-    assign = cell_assignments_np if np_assign else cell_assignments
-    assigned = assign(
-        quantized(corpus), ivf_cells(centroid_source), nprobe=1
-    ).select(
-        "vec_id",
-        F.col("top_cells")[0]["label"].alias("cell"),
-        "qv", "norm2",
+    Same assignment prefix as ``semantic_dedup_keep``
+    (``_pairable_assignment``)."""
+    _, pairable = _pairable_assignment(
+        corpus, centroid_source, max_cell_pop, np_assign
     )
-    if materialize_assignment:
-        assigned = assigned.localCheckpoint(eager=False)
-    pairable = assigned.join(
-        F.broadcast(_pairable_cells(assigned, max_cell_pop)), "cell"
-    )
-    if np_pairs:
-        return _split_leak_counts_np(pairable, threshold)
-    # Zero-norm guard (the _probe_join_topk discipline — see
-    # _per_vec_max_cos_np): undefined cosines pair in neither engine.
-    nz = pairable.filter(F.col("norm2") > 0)
-    ev = nz.filter(F.col("vec_id") % SPLIT_EVAL_MOD == 0).alias("e")
-    tr = nz.filter(F.col("vec_id") % SPLIT_EVAL_MOD != 0).alias("t")
-    cos = (
-        F.expr(_DOT.format(a="e.qv", b="t.qv"))
-        / (F.sqrt("e.norm2") * F.sqrt("t.norm2"))
-    )
-    return (
-        ev.join(tr, F.col("e.cell") == F.col("t.cell"))
-        .filter(cos >= threshold)
-        .groupBy(
-            F.col("e.vec_id").alias("vec_id"),
-            F.col("e.cell").cast("int").alias("cell"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_train_dups"))
-    )
+    return _split_leak_counts(pairable, threshold)
 
 
 def _split_leak_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -559,10 +559,12 @@ def stream_ivf_index_maintenance(
     rewrites earlier vectors and ingest work is ∝ batch — the
     ``stream_postings_maintenance`` contract for the vector side.
     Serve via scale/similarity.py::read_ivf_index_assignment (the
-    unified batch+stream view) + ``ivf_topk_from_assignment``;
-    ``np_assign`` opts into the dgemm assignment twin (the documented
-    family bend — a 100k-vector micro-batch assigns in ~2 s instead of
-    the interpreted expression fold's ~45 s)."""
+    unified batch+stream view) + ``ivf_topk_from_assignment``.
+    ``np_assign`` assigns each micro-batch with one dgemm per Arrow
+    batch (``cell_assignments_np``, values identical to the default
+    expression fold): a 100k-vector micro-batch assigns in ~2 s instead
+    of ~45 s at 1024 cells. It reads the frozen centroid table on the
+    driver once per micro-batch."""
     from etl_validator_github_spark.scale.similarity import (
         home_cell_assignment,
         quantized,

@@ -2267,8 +2267,8 @@ def test_append_ivf_index_retry_is_idempotent(spark, tmp_path):
 def test_ivf_topk_for_queries_matches_standing_batch(spark, tmp_path):
     """The external-query serve API fed the index's own first vectors
     must return exactly what the standing-batch path returns — same
-    assignment, same probe join, same tie-break — and the np_probe
-    opt-in must be bit-identical."""
+    assignment, same probe kernel, same tie-break — with either
+    assignment path (``np_assign``)."""
     from etl_validator_github_spark.scale.similarity import (
         N_QUERIES,
         ivf_topk_for_queries,
@@ -2286,7 +2286,7 @@ def test_ivf_topk_for_queries_matches_standing_batch(spark, tmp_path):
     got = sorted(map(tuple, ivf_topk_for_queries(
         spark, idx, queries).collect()))
     got_np = sorted(map(tuple, ivf_topk_for_queries(
-        spark, idx, queries, np_assign=True, np_probe=True).collect()))
+        spark, idx, queries, np_assign=True).collect()))
     assert got == want and got_np == want and len(got) > 0
 
 

@@ -48,7 +48,7 @@ BLOOM_HELDOUT_DOCS = 10
 
 ALL_OPS = ("gen", "exact", "stats", "bloom", "bloom_strings",
            "minhash", "spans", "ppjoin", "novelty", "bm25", "curation",
-           "sweep", "sweep_expr", "vocab_coverage", "classifier",
+           "sweep", "vocab_coverage", "classifier",
            "split_leak", "ivf_index", "epoch_shuffle", "bpe",
            "keeplongest", "rrf", "bm25_delta", "compaction", "ks_drift",
            "serve_external", "winnow", "contamination")
@@ -166,6 +166,7 @@ def _run_isolated(args, ops) -> int:
     pass_ops = [op for op in ops if op != "gen"]
     merged_c: dict[str, int] = {}
     load0 = os.getloadavg()[0]
+    n_cpus = None  # the children's Spark parallelism
     pass_timings: list[dict[str, object]] = []
     pass_cpus: list[dict[str, object]] = []
     pass_shf: list[dict[str, object]] = []
@@ -195,6 +196,7 @@ def _run_isolated(args, ops) -> int:
             merged_cpu.update(child.get("cpu_sec", {}))
             merged_shf.update(child.get("shuffle_mb", {}))
             merged_c.update(child.get("row_counts", {}))
+            n_cpus = child.get("n_cpus", n_cpus)
         pass_timings.append(merged_t)
         pass_cpus.append(merged_cpu)
         pass_shf.append(merged_shf)
@@ -208,7 +210,8 @@ def _run_isolated(args, ops) -> int:
         "row_counts": merged_c,
         "load_avg_1m": {"start": round(load0, 2),
                         "end": round(os.getloadavg()[0], 2)},
-        "n_cpus": os.cpu_count(),
+        "n_cpus": n_cpus,
+        "host_cpus": len(os.sched_getaffinity(0)),
     }
     if len(pass_timings) > 1:
         doc["passes"] = pass_timings
@@ -504,7 +507,7 @@ def main() -> int:
         """The shared 1M × 64-dim vector table over 1024 IVF cells
         (~sqrt-N cell count, the SemDeDup operating point; cell pops
         ~1k stay far below MAX_CELL_PAIR_POP, so every cell pairs).
-        ONE generator for sweep/split_leak/sweep_expr — the
+        ONE generator for sweep/split_leak/ivf_index — the
         cross-measurement comparability depends on it. Generation is
         persisted untimed."""
         edir = os.path.join(args.workdir, f"emb_{args.docs}.parquet")
@@ -527,26 +530,21 @@ def main() -> int:
         # swept. Timing covers assignment + pair join + per-vector
         # max + threshold fold.
         emb = ensure_emb()
-        # The scale path: dgemm assignment + one materialized pass
-        # (bit-parity with the fixture plan pinned in
-        # tests/test_similarity_np.py). The fixture-default plan is
-        # measured on a 20k slice as the before/after — its
-        # interpreted per-cell lambda fold is the family's bend.
+        # dgemm assignment (np_assign): the expression assignment's
+        # interpreted per-cell lambda fold is the family's scale bend.
         timed("sweep", lambda: force(semantic_threshold_sweep(
-            emb, emb, np_assign=True, materialize_assignment=True,
-            np_pairs=True)))
+            emb, emb, np_assign=True)))
 
     if "split_leak" in ops:
         from etl_validator_github_spark.scale.similarity import (
             semantic_split_leakage,
         )
-        # Same 1M × 64-dim vector table and opt-ins as the sweep; the
-        # cross-split pair pass touches only eval×train entries of
+        # Same 1M × 64-dim vector table and assignment as the sweep;
+        # the cross-split pair pass touches only eval×train entries of
         # each cell's gram — cost class bounded by one sweep pass.
         emb = ensure_emb()
         timed("split_leak", lambda: force(semantic_split_leakage(
-            emb, emb, np_assign=True, materialize_assignment=True,
-            np_pairs=True)))
+            emb, emb, np_assign=True)))
 
     if "ivf_index" in ops:
         from etl_validator_github_spark.scale.similarity import (
@@ -578,7 +576,7 @@ def main() -> int:
             delta, idx, np_assign=True, delta_id="measure-delta"),
             stable=True)
         timed("ivf_index_search_1k", lambda: force(ivf_topk_from_index(
-            spark, idx, n_queries=1000, np_assign=True, np_probe=True)))
+            spark, idx, n_queries=1000, np_assign=True)))
 
     if "epoch_shuffle" in ops:
         from etl_validator_github_spark.scale.snapshots import epoch_shuffle
@@ -588,14 +586,6 @@ def main() -> int:
         timed("epoch_shuffle", lambda: force(
             epoch_shuffle(docs.select("doc_id", "text", "lang",
                                       "source", "n_chars"))))
-
-    if "sweep_expr" in ops:
-        # The fixture-default expression plan, measured on a 20k slice
-        # as the before/after for the dgemm opt-ins (interpreted
-        # per-cell lambda folds; a full 1M run would take hours).
-        slice20k = ensure_emb().filter(F.col("vec_id") < 20_000)
-        timed("sweep_expr_20k", lambda: force(semantic_threshold_sweep(
-            slice20k, slice20k)), repeat=1)
 
     if "vocab_coverage" in ops:
         from etl_validator_github_spark.scale.text import (
@@ -663,7 +653,7 @@ def main() -> int:
             " as float)) as embedding",
         ))
         timed("serve_external_1k", lambda: force(ivf_topk_for_queries(
-            spark, idx, ext_q, np_assign=True, np_probe=True)),
+            spark, idx, ext_q, np_assign=True)),
             stable=True)
 
     if "compaction" in ops:
@@ -788,7 +778,8 @@ def main() -> int:
         "row_counts": counts,
         "load_avg_1m": {"start": round(load0, 2),
                         "end": round(os.getloadavg()[0], 2)},
-        "n_cpus": os.cpu_count(),
+        "n_cpus": spark.sparkContext.defaultParallelism,
+        "host_cpus": len(os.sched_getaffinity(0)),
     }))
     return 0
 
